@@ -111,7 +111,10 @@ object Bench {
     def time(name: String): (Double, Boolean) = {
       val t0 = System.nanoTime()
       val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-      catch { case _: Throwable => false }
+      catch { case e: Throwable =>
+        System.err.println(s"[bench] $name FAILED: $e")
+        false
+      }
       val secs = (System.nanoTime() - t0) / 1e9
       // intra-query persist()s (jaccard/simhash reuse) must not leak into
       // the next query's timing or memory

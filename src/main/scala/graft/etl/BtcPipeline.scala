@@ -15,8 +15,9 @@ import org.apache.spark.sql.functions._
   *     in the transform (scan -> filter -> project is narrow),
   *   - the filename-validity filter and date extraction run on the
   *     already-scanned `input_file_name()`, not a separate listing pass,
-  *   - the ledger anti-join broadcasts the (small) ledger; the fact side
-  *     never shuffles,
+  *   - the ledger (processed FILE paths) is filtered on the driver against
+  *     the listing, which is already a driver-side Seq; no job reads the
+  *     fact side for it,
   *   - the sink partitions by date, so downstream reads prune by time like
   *     the reference's TimescaleDB hypertable (btc_etl.py:99-101).
   */
@@ -147,42 +148,44 @@ object BtcPipeline {
   }
 
   /** Cross-batch PRIMARY KEY enforcement (btc_etl.py:74): drop incoming
-    * rows whose `date_time` already exists in the sink. Reads ONLY the sink
-    * date partitions matching the batch's dates (static partition pruning
-    * on the literal date list), so the probe cost is bounded by the batch's
-    * date span — not sink size — at 100 TB. */
+    * rows whose `date_time` already exists in the sink. Probes
+    * `sink/date=D` through the Hadoop FileSystem for each of the batch's
+    * dates and reads only the directories that exist, so the cost is
+    * bounded by the batch's date span, never by the sink's partition
+    * count. The explicit read schema keeps an empty or half-committed
+    * `date=` directory from failing schema inference. When none of the
+    * batch's dates is in the sink (every new day) the batch comes back
+    * unchanged: no sink read, no join. */
   private[graft] def antiJoinSinkDates(
       spark: SparkSession,
       batch: DataFrame,
       sinkPath: String,
       dates: Seq[java.sql.Date]): DataFrame = {
-    val sinkP = new Path(sinkPath)
-    val fs = sinkP.getFileSystem(spark.sessionState.newHadoopConf())
-    if (dates.isEmpty || !fs.exists(sinkP)) batch
+    val fs = new Path(sinkPath).getFileSystem(spark.sessionState.newHadoopConf())
+    val present = dates.distinct.map(d => new Path(sinkPath, s"date=$d")).filter(fs.exists)
+    if (present.isEmpty) batch
     else {
-      val existing = spark.read.parquet(sinkPath)
-        .filter(col("date").isin(dates: _*))
-        .select("date_time")
+      val existing = spark.read.schema("date_time TIMESTAMP")
+        .parquet(present.map(_.toString): _*)
       batch.join(existing, Seq("date_time"), "left_anti")
     }
   }
 
-  /** Full backfill with FILE-level skip: the ledger anti-join happens on
-    * the directory LISTING (metadata), before any data is read — at 100 TB
-    * the job scans only the not-yet-ingested delta, exactly like the
-    * reference's is_processed check before pd.read_csv
-    * (btc_etl.py:115,130,152). Then: transform the delta, dedup the PK
-    * within the batch (btc_etl.py:74 — a duplicate `date_time` would abort
-    * the reference file's insert; dedupPk keeps the lexicographically-
-    * smallest metric row, so the survivor is partitioning-independent),
-    * drop rows whose key already exists in the sink (cross-batch PK,
-    * antiJoinSinkDates — a replayed file after ledger loss adds zero
-    * rows), append to the date-partitioned sink, and append the ledger
-    * last (sink-then-
-    * ledger ordering: a crash between the two reprocesses the file into an
-    * idempotent partitioned sink rather than losing it — same at-least-once
-    * stance as btc_etl.py:144,180, upgraded by the streaming checkpoint in
-    * the watch phase). */
+  /** Full backfill with FILE-level skip: the listing is filtered against
+    * the ledger on the driver, before any data is read — the job scans
+    * only the not-yet-ingested delta, exactly like the reference's
+    * is_processed check before pd.read_csv (btc_etl.py:115,130,152). Then:
+    * transform the delta, dedup the PK within the batch (btc_etl.py:74 — a
+    * duplicate `date_time` would abort the reference file's insert;
+    * dedupPk keeps the lexicographically-smallest metric row, so the
+    * survivor is partitioning-independent), drop rows whose key already
+    * exists in the sink (cross-batch PK, antiJoinSinkDates — a replayed
+    * file after ledger loss adds zero rows), append to the
+    * date-partitioned sink, and rewrite the ledger last (sink-then-ledger
+    * ordering: a crash between the two reprocesses the file into an
+    * idempotent partitioned sink rather than losing it — same
+    * at-least-once stance as btc_etl.py:144,180, upgraded by the
+    * streaming checkpoint in the watch phase). */
   def backfill(
       spark: SparkSession,
       srcDir: String,
@@ -191,23 +194,24 @@ object BtcPipeline {
     import spark.implicits._
     val hconf = spark.sessionState.newHadoopConf()
 
+    // the ledger holds one row per processed FILE, so it fits the driver
+    // as a set of fully qualified paths
     val ledgerP = new Path(ledgerPath)
     val ledgerFs = ledgerP.getFileSystem(hconf)
-    val ledger: DataFrame =
-      if (ledgerFs.exists(ledgerP)) spark.read.parquet(ledgerPath)
-      else Seq.empty[String].toDF("path")
+    val done: Set[String] =
+      if (ledgerFs.exists(ledgerP))
+        spark.read.schema("path STRING").parquet(ledgerPath).as[String].collect().toSet
+      else Set.empty
 
     // metadata-level listing through the Hadoop FileSystem API — the same
     // code path works on file://, hdfs:// and s3a:// (java.io.File would be
-    // dead on a cluster store); rows = files, so the collect is bounded by
-    // the delta file count. Paths are kept fully qualified.
+    // dead on a cluster store). Paths are kept fully qualified.
     val srcP = new Path(srcDir)
     val srcFs = srcP.getFileSystem(hconf)
     val listed = srcFs.listStatus(srcP)
       .filter(st => st.isFile && st.getPath.getName.endsWith(".csv"))
       .map(_.getPath.toString).toSeq
-    val freshPaths = Ops.antiJoinLedger(listed.toDF("path"), ledger, "path")
-      .as[String].collect().sorted.toSeq
+    val freshPaths = listed.filterNot(done).sorted
     if (freshPaths.isEmpty) return
 
     val fresh = dedupPk(transformPaths(spark, freshPaths))
@@ -227,7 +231,7 @@ object BtcPipeline {
     // and both steps throw on failure — a silently-lost ledger would make
     // the next backfill reprocess everything
     val tmpP = new Path(ledgerPath + ".tmp")
-    Ops.ledgerAppend(ledger, freshPaths.toDF("path"))
+    (done.toSeq ++ freshPaths).sorted.toDF("path").coalesce(1)
       .write.mode("overwrite").parquet(tmpP.toString)
     if (ledgerFs.exists(ledgerP) && !ledgerFs.delete(ledgerP, true))
       throw new java.io.IOException(s"failed to delete old ledger at $ledgerP")

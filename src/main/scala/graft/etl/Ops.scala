@@ -62,11 +62,15 @@ object Ops {
     * anti-join is a map-side BroadcastHashJoin with no shuffle of the
     * (huge) fact side. If a deployment's ledger ever outgrows the
     * broadcast budget, drop the hint and let AQE pick shuffle vs
-    * broadcast at runtime. */
+    * broadcast at runtime. Catalog key `antijoin_processed`;
+    * `BtcPipeline.backfill` no longer calls it — it filters its listing
+    * against the ledger on the driver. */
   def antiJoinLedger(df: DataFrame, ledger: DataFrame, keyCol: String): DataFrame =
     df.join(broadcast(ledger.select(keyCol).distinct()), Seq(keyCol), "left_anti")
 
-  /** #12 ledger_append (utils.py:32-36): ledger ∪ newly-processed keys. */
+  /** #12 ledger_append (utils.py:32-36): ledger ∪ newly-processed keys.
+    * Catalog key `ledger_append`; `BtcPipeline.backfill` no longer calls it
+    * — it writes its new ledger from the driver-side path set. */
   def ledgerAppend(ledger: DataFrame, processed: DataFrame): DataFrame =
     ledger.unionByName(processed).distinct()
 }

@@ -1204,9 +1204,11 @@ object StreamQueries {
         // fixed multi-exchange barrier chain per micro-batch; above it
         // the bounded tier's output-bounded work wins (r16 shipped the
         // bounded form unconditionally and paid +1–2s/key at sf0.1 —
-        // the r16-verdict trade this closes). The history rowcount is a
-        // parquet-footer count (metadata job). At index-worthy history
-        // sizes a deployment maintains the SymSpell core index instead
+        // the r16-verdict trade this closes). The history rowcount that
+        // picks the tier is a real scan job over the history per
+        // micro-batch, not a footer-only metadata count. At
+        // index-worthy history sizes a deployment maintains the SymSpell
+        // core index instead
         // (deletionCoreIndex rows appended per batch +
         // boundedPairsIncrementalIndexed — the ErLedger.foldBatch
         // layout).

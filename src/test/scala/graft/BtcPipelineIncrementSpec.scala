@@ -1,0 +1,140 @@
+package graft
+
+import java.nio.file.{Files, Paths}
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.sql.functions._
+
+import graft.etl.BtcPipeline
+
+/** Incremental cost and exactly-once behaviour of the backfill and the
+  * watch tail on tiny inline CSVs: the sink probe reads only the `date=`
+  * directories a batch touches, and the ledger is filtered on the driver. */
+class BtcPipelineIncrementSpec extends SparkSpec {
+
+  private val header =
+    "Time,Open,High,Low,Close,Volume_(BTC),Volume_(Currency),Weighted_Price"
+
+  /** Writes `btcusd-<day>.csv` with `minutes` traded minutes and one
+    * all-null minute, which the pipeline drops. */
+  private def writeDay(src: String, day: String, minutes: Int): Unit = {
+    val rows = (0 until minutes).map(m => f"00:$m%02d:00,1,2,3,4,5,6,${m + 1}") :+
+      f"00:$minutes%02d:00,,,,,,,"
+    Files.writeString(Paths.get(s"$src/btcusd-$day.csv"), (header +: rows).mkString("", "\n", "\n"))
+  }
+
+  /** Runs `body` on (src, sink, ledger) paths in a temp directory that is
+    * removed afterwards. */
+  private def withScratch(tag: String)(body: (String, String, String) => Unit): Unit = {
+    val tmp = Files.createTempDirectory(s"graft-incr-$tag-").toFile
+    val src = s"$tmp/src"; new java.io.File(src).mkdirs()
+    try body(src, s"$tmp/sink", s"$tmp/ledger")
+    finally org.apache.commons.io.FileUtils.deleteDirectory(tmp)
+  }
+
+  private def sinkRows(sink: String, day: String): Long =
+    spark.read.parquet(sink).filter(col("date") === lit(day)).count()
+
+  private def ledgerPaths(ledger: String): Set[String] = {
+    import spark.implicits._
+    spark.read.parquet(ledger).as[String].collect().toSet
+  }
+
+  /** A sink-shaped batch with a `date` column, as backfill and watch pass it. */
+  private def batchAt(stamps: String*) = {
+    import spark.implicits._
+    stamps.toDF("s").select(to_timestamp(col("s")).as("date_time"))
+      .withColumn("open_price", lit(1.0))
+      .withColumn("date", to_date(col("date_time")))
+  }
+
+  test("a new day backfilled into a populated sink appends exactly its rows") {
+    withScratch("newday") { (src, sink, ledger) =>
+      writeDay(src, "2013-01-01", 3)
+      BtcPipeline.backfill(spark, src, sink, ledger)
+      assert(spark.read.parquet(sink).count() === 3L)
+
+      writeDay(src, "2013-01-02", 5)
+      BtcPipeline.backfill(spark, src, sink, ledger)
+      assert(sinkRows(sink, "2013-01-01") === 3L)
+      assert(sinkRows(sink, "2013-01-02") === 5L)
+
+      val batch = batchAt("2013-01-03 00:00:00")
+      assert(BtcPipeline.antiJoinSinkDates(spark, batch, sink,
+        Seq(java.sql.Date.valueOf("2013-01-03"))) eq batch,
+        "a date absent from the sink must return the batch itself: no sink read, no join")
+    }
+  }
+
+  test("the probe scans only the date= directory of a present date") {
+    withScratch("probe") { (src, sink, ledger) =>
+      writeDay(src, "2013-01-01", 3)
+      writeDay(src, "2013-01-02", 2)
+      BtcPipeline.backfill(spark, src, sink, ledger)
+
+      val batch = batchAt("2013-01-01 00:01:00", "2013-01-01 00:10:00", "2013-01-04 00:00:00")
+      val dates = Seq("2013-01-01", "2013-01-04").map(java.sql.Date.valueOf)
+      val out = BtcPipeline.antiJoinSinkDates(spark, batch, sink, dates)
+      val roots = out.queryExecution.sparkPlan.collect {
+        case s: FileSourceScanExec => s.relation.location.rootPaths
+      }.flatten
+      val fs = new Path(sink).getFileSystem(spark.sessionState.newHadoopConf())
+      assert(roots === Seq(fs.makeQualified(new Path(sink, "date=2013-01-01"))))
+      import spark.implicits._
+      assert(out.select(date_format(col("date_time"), "yyyy-MM-dd HH:mm:ss")).as[String]
+        .collect().sorted.toSeq === Seq("2013-01-01 00:10:00", "2013-01-04 00:00:00"))
+    }
+  }
+
+  test("ledger loss: replaying an old file with a new one appends only the new day") {
+    withScratch("replay") { (src, sink, ledger) =>
+      writeDay(src, "2013-01-01", 4)
+      BtcPipeline.backfill(spark, src, sink, ledger)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ledger))
+      writeDay(src, "2013-01-02", 6)
+      BtcPipeline.backfill(spark, src, sink, ledger)
+      assert(sinkRows(sink, "2013-01-01") === 4L)
+      assert(sinkRows(sink, "2013-01-02") === 6L)
+      assert(ledgerPaths(ledger).size === 2)
+    }
+  }
+
+  test("a date= directory with no parquet file does not fail the probe") {
+    withScratch("empty") { (_, sink, _) =>
+      new java.io.File(s"$sink/date=2013-01-05/_temporary").mkdirs()
+      val batch = batchAt("2013-01-05 00:00:00", "2013-01-05 00:01:00")
+      val out = BtcPipeline.antiJoinSinkDates(spark, batch, sink,
+        Seq(java.sql.Date.valueOf("2013-01-05")))
+      assert(out.count() === 2L)
+    }
+  }
+
+  test("a second watch with a fresh checkpoint over the same files adds zero rows") {
+    withScratch("watch") { (src, sink, _) =>
+      val ckpt = new java.io.File(sink).getParent
+      writeDay(src, "2013-01-01", 3)
+      writeDay(src, "2013-01-02", 2)
+      for (run <- Seq("ckpt1", "ckpt2")) {
+        val q = BtcPipeline.watch(spark, src, sink, s"$ckpt/$run")
+        try q.processAllAvailable() finally q.stop()
+        assert(spark.read.parquet(sink).count() === 5L, s"after $run")
+      }
+    }
+  }
+
+  test("a no-op rerun leaves the ledger's path set unchanged") {
+    withScratch("noop") { (src, sink, ledger) =>
+      writeDay(src, "2013-01-01", 2)
+      writeDay(src, "2013-01-02", 2)
+      BtcPipeline.backfill(spark, src, sink, ledger)
+      val before = ledgerPaths(ledger)
+      assert(before.size === 2 && before.forall(_.endsWith(".csv")))
+      assert(new java.io.File(ledger).listFiles().count(_.getName.endsWith(".parquet")) === 1,
+        "the ledger is written as a single file")
+      BtcPipeline.backfill(spark, src, sink, ledger)
+      assert(ledgerPaths(ledger) === before)
+      assert(spark.read.parquet(sink).count() === 4L)
+    }
+  }
+}

@@ -144,7 +144,7 @@ object OptProbe {
         val dir = graft.queries.Staging.tmpDir("probe-ann2")
         def storeFiles(idx: String): Long = {
           def walk(f: java.io.File): Long =
-            if (f.isDirectory) f.listFiles().map(walk).sum
+            if (f.isDirectory) Option(f.listFiles()).map(_.map(walk).sum).getOrElse(0L)
             else if (f.getName.startsWith("part-")) 1L else 0L
           walk(new java.io.File(s"$idx/vectors"))
         }
