@@ -13,8 +13,11 @@ import org.apache.spark.sql.functions._
   *   - the glob scan parallelises across the cluster; with 100 TB of daily
   *     files the unit of parallelism stays the file — no shuffle anywhere
   *     in the transform (scan -> filter -> project is narrow),
-  *   - the filename-validity filter and date extraction run on the
-  *     already-scanned `input_file_name()`, not a separate listing pass,
+  *   - the file name comes from the `_metadata.file_name` constant
+  *     column, so the name-validity filter and the backfill's fresh-file
+  *     selection are pruned in the file index on the driver: rejected and
+  *     already-ingested files are never opened, and one root path needs no
+  *     listing job however many files it holds,
   *   - the ledger (processed FILE paths) is filtered on the driver against
   *     the listing, which is already a driver-side Seq; no job reads the
   *     fact side for it,
@@ -34,37 +37,37 @@ object BtcPipeline {
 
   /** Sink dispatch for a transformed batch. Parquet: clustered
     * date-partitioned append — rows repartition on the partition column so
-    * one writer task serves each date instead of tasks × dates small
-    * files. JDBC: batched inserts through the pooled writer; PK
-    * enforcement is the database's (btc_etl.py:74), so no anti-join is
-    * needed on that path. Both backfill and the watch foreachBatch write
-    * through here. */
-  def appendBatch(df: DataFrame, target: SinkTarget): Unit = target match {
-    case ParquetSink(path) =>
-      df.withColumn("date", to_date(col("date_time")))
-        .select((Schemas.sinkCols :+ "date").map(col): _*)
-        .repartition(col("date"))
-        .write.mode("append").partitionBy("date").parquet(path)
-    case JdbcTarget(o) =>
-      graft.sources.JdbcSink.append(df, o)
-  }
+    * each date lands in exactly one writer task (one file per date instead
+    * of tasks × dates small files), on `min(dates, defaultParallelism)`
+    * writers. The count must be explicit: a batch's shuffle is small, so
+    * AQE would coalesce a `repartition(date)` into one task that writes
+    * every date in turn, while one writer per date would pay a task commit
+    * per date. `dates` is the number of dates in the batch; left out, the
+    * cluster's parallelism alone caps the writers. JDBC: batched inserts
+    * through the pooled writer; PK enforcement is the database's
+    * (btc_etl.py:74), so no anti-join is needed on that path. Both backfill
+    * and the watch foreachBatch write through here. */
+  def appendBatch(df: DataFrame, target: SinkTarget, dates: Int = Int.MaxValue): Unit =
+    target match {
+      case ParquetSink(path) =>
+        val writers = math.max(1, math.min(dates, df.sparkSession.sparkContext.defaultParallelism))
+        df.withColumn("date", to_date(col("date_time")))
+          .select((Schemas.sinkCols :+ "date").map(col): _*)
+          .repartition(writers, col("date"))
+          .write.mode("append").partitionBy("date").parquet(path)
+      case JdbcTarget(o) =>
+        graft.sources.JdbcSink.append(df, o)
+    }
 
-  /** Scan + validate + transform: the per-file ETL (btc_etl.py:150-176).
-    * Returns the sink-shaped frame (date_time + 7 renamed metric columns).
-    * Accepts a directory or an explicit file list (the backfill passes only
-    * the not-yet-ingested delta). */
-  def transform(spark: SparkSession, dir: String): DataFrame =
-    transformPaths(spark, Seq(dir))
+  private val csvOptions = Map("header" -> "true", "pathGlobFilter" -> "*.csv")
 
-  def transformPaths(spark: SparkSession, paths: Seq[String]): DataFrame = {
-    val raw = spark.read
-      .option("header", "true")
-      .schema(Schemas.btcCsv)
-      .option("pathGlobFilter", "*.csv")
-      .csv(paths: _*)
-      .withColumn("_file", regexp_extract(input_file_name(), "([^/]+)$", 1))
-
+  /** Validate + transform: the per-file ETL (btc_etl.py:150-176) over a raw
+    * CSV frame, batch or streaming, read with `csvOptions` and
+    * `Schemas.btcCsv`. Returns the sink-shaped frame (date_time + 7 renamed
+    * metric columns). */
+  private def shape(raw: DataFrame): DataFrame = {
     val valid = raw
+      .withColumn("_file", col("_metadata.file_name"))
       .filter(Ops.isValidBtcFilename(col("_file")))
       .withColumn("file_date", Ops.dateFromFilename(col("_file")))
 
@@ -81,6 +84,13 @@ object BtcPipeline {
     Ops.renameAndSelect(stamped).filter(col("date_time").isNotNull)
   }
 
+  /** Scan + validate + transform of a directory or an explicit file list. */
+  def transform(spark: SparkSession, dir: String): DataFrame =
+    transformPaths(spark, Seq(dir))
+
+  def transformPaths(spark: SparkSession, paths: Seq[String]): DataFrame =
+    shape(spark.read.options(csvOptions).schema(Schemas.btcCsv).csv(paths: _*))
+
   /** The unbounded "watch" phase (btc_etl.py:185-228): a Structured
     * Streaming query over the same directory. The file-source checkpoint
     * replaces watchdog + the Redis processed-set with exactly-once file
@@ -95,24 +105,9 @@ object BtcPipeline {
       sinkPath: String,
       checkpoint: String,
       maxFilesPerTrigger: Int = 16): org.apache.spark.sql.streaming.StreamingQuery = {
-    val stream = spark.readStream
-      .option("header", "true")
-      .schema(Schemas.btcCsv)
-      .option("pathGlobFilter", "*.csv")
+    val shaped = shape(spark.readStream.options(csvOptions).schema(Schemas.btcCsv)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
-      .csv(srcDir)
-      .withColumn("_file", regexp_extract(input_file_name(), "([^/]+)$", 1))
-
-    val shaped = {
-      val valid = stream
-        .filter(Ops.isValidBtcFilename(col("_file")))
-        .withColumn("file_date", Ops.dateFromFilename(col("_file")))
-      val kept = Ops.dropAllNull(valid, Schemas.metricCols)
-      Ops.renameAndSelect(
-        kept.withColumn("date_time", Ops.makeTimestamp(col("file_date"), col("Time"))))
-        .filter(col("date_time").isNotNull) // NOT NULL PK, as in transformPaths
-        .withColumn("date", to_date(col("date_time")))
-    }
+      .csv(srcDir))
 
     shaped.writeStream
       .option("checkpointLocation", checkpoint)
@@ -129,7 +124,7 @@ object BtcPipeline {
           val dates = b.select(col("date")).distinct().collect()
             .map(_.getDate(0)).toSeq
           appendBatch(antiJoinSinkDates(sess, b, sinkPath, dates).drop("date"),
-            ParquetSink(sinkPath))
+            ParquetSink(sinkPath), dates.size)
         } finally { b.unpersist(); () }
       }
       .start()
@@ -214,18 +209,23 @@ object BtcPipeline {
     val freshPaths = listed.filterNot(done).sorted
     if (freshPaths.isEmpty) return
 
-    val fresh = dedupPk(transformPaths(spark, freshPaths))
-      .withColumn("date", to_date(col("date_time")))
+    // the fresh files are selected by NAME on the one-root read of srcDir:
+    // the filter is pruned in the file index, so only they are opened and
+    // no listing job runs (explicit paths past 32 would start one); a name
+    // identifies a file because `listed` covers one directory level
+    val freshNames = freshPaths.map(p => p.substring(p.lastIndexOf('/') + 1))
+    val raw = spark.read.options(csvOptions).schema(Schemas.btcCsv).csv(srcDir)
+      .filter(col("_metadata.file_name").isin(freshNames: _*))
+    val fresh = dedupPk(shape(raw)).withColumn("date", to_date(col("date_time")))
 
     // cross-batch PK scope derived from the FILENAMES (metadata, no data
     // scan): every surviving row's date is its file's date
-    val batchDates = freshPaths
-      .map(p => p.substring(p.lastIndexOf('/') + 1))
+    val batchDates = freshNames
       .filter(_.matches(Schemas.filenameRegex))
       .flatMap(n => scala.util.Try(java.sql.Date.valueOf(n.substring(7, 17))).toOption)
 
     appendBatch(antiJoinSinkDates(spark, fresh, sinkPath, batchDates).drop("date"),
-      ParquetSink(sinkPath))
+      ParquetSink(sinkPath), batchDates.size)
 
     // swap: the NEW ledger is fully written before the old one is touched,
     // and both steps throw on failure — a silently-lost ledger would make

@@ -1,22 +1,18 @@
 package graft.etl
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
 /** The reference's `create_hypertable(..., migrate_data => TRUE)` analog
   * (/root/reference/btc_etl.py:99-101): convert an EXISTING unpartitioned
   * sink table into the date-partitioned layout, preserving every row.
   *
-  * One shuffle on the partition key (repartition by date -> one writer
-  * task per date, no tasks×dates small files), then a partitioned write —
-  * the same clustered-write shape as BtcPipeline.backfill. At 100 TB this
-  * is a single linear pass; TimescaleDB's migrate_data does the equivalent
-  * row movement inside Postgres. */
+  * The rows go through `BtcPipeline.appendBatch`, the same clustered write
+  * as the backfill: one shuffle on the date, one file per date, on at most
+  * `defaultParallelism` writers (the table's date count is not known
+  * without a scan). At 100 TB this is a single linear pass; TimescaleDB's
+  * migrate_data does the equivalent row movement inside Postgres. */
 object ParquetMigrate {
 
   def toDatePartitioned(spark: SparkSession, srcPath: String, dstPath: String): Unit =
-    spark.read.parquet(srcPath)
-      .withColumn("date", to_date(col("date_time")))
-      .repartition(col("date"))
-      .write.mode("append").partitionBy("date").parquet(dstPath)
+    BtcPipeline.appendBatch(spark.read.parquet(srcPath), ParquetSink(dstPath))
 }

@@ -2,15 +2,21 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
 import org.apache.spark.sql.execution.FileSourceScanExec
 import org.apache.spark.sql.functions._
 
-import graft.etl.BtcPipeline
+import graft.etl.{BtcPipeline, ParquetMigrate}
 
 /** Incremental cost and exactly-once behaviour of the backfill and the
   * watch tail on tiny inline CSVs: the sink probe reads only the `date=`
-  * directories a batch touches, and the ledger is filtered on the driver. */
+  * directories a batch touches, the ledger is filtered on the driver, the
+  * fresh files are selected by name in the file index, and a batch's dates
+  * are written by parallel writers, one file per date. */
 class BtcPipelineIncrementSpec extends SparkSpec {
 
   private val header =
@@ -40,6 +46,38 @@ class BtcPipelineIncrementSpec extends SparkSpec {
     import spark.implicits._
     spark.read.parquet(ledger).as[String].collect().toSet
   }
+
+  /** Runs `body` and returns the descriptions of the jobs it started and
+    * the bytes its tasks read. */
+  private def observed(body: => Unit): (Seq[String], Long) = {
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val bytesRead = new java.util.concurrent.atomic.AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.add(Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        Option(t.taskMetrics).foreach(m => bytesRead.addAndGet(m.inputMetrics.bytesRead))
+    }
+    val sc = spark.sparkContext
+    ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try body
+    finally { ListenerBusDrain(sc); sc.removeSparkListener(listener) }
+    (jobs.asScala.toSeq, bytesRead.get)
+  }
+
+  private def days(n: Int): Seq[String] =
+    (0 until n).map(i => java.time.LocalDate.parse("2013-01-01").plusDays(i.toLong).toString)
+
+  /** The parquet files of each `date=` directory of `sink`, by date. */
+  private def sinkFiles(sink: String): Map[String, Seq[String]] =
+    new java.io.File(sink).listFiles().filter(_.getName.startsWith("date=")).map { d =>
+      d.getName.stripPrefix("date=") -> d.listFiles().map(_.getName).filter(_.endsWith(".parquet")).toSeq
+    }.toMap
+
+  /** The writer partition id in a `part-NNNNN-...` file name. */
+  private def partId(file: String): Int = file.substring(5, 10).toInt
 
   /** A sink-shaped batch with a `date` column, as backfill and watch pass it. */
   private def batchAt(stamps: String*) = {
@@ -135,6 +173,57 @@ class BtcPipelineIncrementSpec extends SparkSpec {
       BtcPipeline.backfill(spark, src, sink, ledger)
       assert(ledgerPaths(ledger) === before)
       assert(spark.read.parquet(sink).count() === 4L)
+    }
+  }
+
+  test("a cold backfill selects its files by name: no listing job, invalid names never opened") {
+    withScratch("byname") { (src, sink, ledger) =>
+      days(40).foreach(writeDay(src, _, 2))
+      // a valid-looking name with an impossible date, far larger than the
+      // 40 days together
+      val bad = java.nio.file.Paths.get(s"$src/btcusd-2013-02-30.csv")
+      Files.writeString(bad, (header +: Seq.fill(40000)("00:00:00,1,2,3,4,5,6,7")).mkString("\n"))
+      val (jobs, bytesRead) = observed(BtcPipeline.backfill(spark, src, sink, ledger))
+      assert(!jobs.exists(_.startsWith("Listing leaf files")), jobs.mkString("\n"))
+      assert(bytesRead < Files.size(bad), s"read $bytesRead bytes")
+      assert(spark.read.parquet(sink).count() === 80L)
+      assert(ledgerPaths(ledger).size === 41, "the rejected file is ledgered too")
+    }
+  }
+
+  test("a backfill writes one file per date on min(dates, defaultParallelism) writers, a one-day increment on one") {
+    withScratch("writers") { (src, sink, ledger) =>
+      days(41).init.foreach(writeDay(src, _, 2))
+      BtcPipeline.backfill(spark, src, sink, ledger)
+      val files = sinkFiles(sink)
+      assert(files.size === 40 && files.values.forall(_.size == 1), files)
+      val writers = files.values.flatten.map(partId).toSet
+      assert(writers.size > 1 && writers.size <= math.min(40, spark.sparkContext.defaultParallelism),
+        writers)
+
+      // a one-day increment writes with one task
+      writeDay(src, days(41).last, 3)
+      BtcPipeline.backfill(spark, src, sink, ledger)
+      val after = sinkFiles(sink)
+      assert(after.removed(days(41).last) === files)
+      assert(after(days(41).last).map(partId) === Seq(0))
+      assert(sinkRows(sink, days(41).last) === 3L)
+    }
+  }
+
+  test("ParquetMigrate keeps every row and writes one file per date") {
+    withScratch("migrate") { (src, _, _) =>
+      days(6).foreach(writeDay(src, _, 4))
+      val dst = new java.io.File(src).getParent
+      val flat = BtcPipeline.transform(spark, src).repartition(3)
+      flat.write.parquet(s"$dst/flat")
+      ParquetMigrate.toDatePartitioned(spark, s"$dst/flat", s"$dst/part")
+      val files = sinkFiles(s"$dst/part")
+      assert(files.size === 6 && files.values.forall(_.size == 1), files)
+      val back = spark.read.parquet(s"$dst/part").drop("date")
+      val orig = spark.read.parquet(s"$dst/flat")
+      assert(back.count() === 24L)
+      assert(back.exceptAll(orig).isEmpty && orig.exceptAll(back).isEmpty)
     }
   }
 }
