@@ -18,9 +18,10 @@ import org.apache.spark.sql.functions._
   *     selection are pruned in the file index on the driver: rejected and
   *     already-ingested files are never opened, and one root path needs no
   *     listing job however many files it holds,
-  *   - the ledger (processed FILE paths) is filtered on the driver against
-  *     the listing, which is already a driver-side Seq; no job reads the
-  *     fact side for it,
+  *   - the ledger (processed FILE paths) is one text file that the driver
+  *     reads and writes through the Hadoop FileSystem API and filters the
+  *     listing against; no Spark job touches it, so a no-op rerun runs
+  *     none at all,
   *   - the sink partitions by date, so downstream reads prune by time like
   *     the reference's TimescaleDB hypertable (btc_etl.py:99-101).
   */
@@ -60,6 +61,9 @@ object BtcPipeline {
     }
 
   private val csvOptions = Map("header" -> "true", "pathGlobFilter" -> "*.csv")
+
+  /** The one file of a backfill ledger directory. */
+  private val ledgerFile = "paths.txt"
 
   /** Validate + transform: the per-file ETL (btc_etl.py:150-176) over a raw
     * CSV frame, batch or streaming, read with `csvOptions` and
@@ -180,31 +184,49 @@ object BtcPipeline {
     * ordering: a crash between the two reprocesses the file into an
     * idempotent partitioned sink rather than losing it — same
     * at-least-once stance as btc_etl.py:144,180, upgraded by the
-    * streaming checkpoint in the watch phase). */
+    * streaming checkpoint in the watch phase).
+    *
+    * The ledger is the directory `ledgerPath` holding one UTF-8 file,
+    * `paths.txt`: the fully qualified path of every processed file, one a
+    * line, sorted and newline-terminated. The driver reads and writes it
+    * directly (the reference's Redis set, utils.py:24-36, costs one call
+    * per file; this costs one open and one create per backfill). The new
+    * ledger is written to `ledgerPath.tmp`, the old one deleted and the
+    * `.tmp` renamed into place; a crash between the last two steps leaves
+    * no ledger, so the next backfill replays into the sink's PK anti-join
+    * and adds zero rows. A `ledgerPath` directory without `paths.txt` (a
+    * parquet ledger of an older build) fails the backfill before anything
+    * is written; deleting it costs one such replay. */
   def backfill(
       spark: SparkSession,
       srcDir: String,
       sinkPath: String,
       ledgerPath: String): Unit = {
-    import spark.implicits._
     val hconf = spark.sessionState.newHadoopConf()
 
-    // the ledger holds one row per processed FILE, so it fits the driver
-    // as a set of fully qualified paths
+    // the ledger holds one line per processed FILE, so the driver reads it
+    // whole as a set of fully qualified paths
     val ledgerP = new Path(ledgerPath)
     val ledgerFs = ledgerP.getFileSystem(hconf)
     val done: Set[String] =
-      if (ledgerFs.exists(ledgerP))
-        spark.read.schema("path STRING").parquet(ledgerPath).as[String].collect().toSet
-      else Set.empty
+      if (ledgerFs.exists(ledgerP)) {
+        val in = ledgerFs.open(new Path(ledgerP, ledgerFile))
+        try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toSet
+        finally in.close()
+      } else Set.empty
 
     // metadata-level listing through the Hadoop FileSystem API — the same
     // code path works on file://, hdfs:// and s3a:// (java.io.File would be
-    // dead on a cluster store). Paths are kept fully qualified.
+    // dead on a cluster store). Paths are kept fully qualified. A name with
+    // a line break can never be a valid day and would split across two
+    // ledger lines, so it is not listed at all.
     val srcP = new Path(srcDir)
     val srcFs = srcP.getFileSystem(hconf)
     val listed = srcFs.listStatus(srcP)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".csv"))
+      .filter { st =>
+        val name = st.getPath.getName
+        st.isFile && name.endsWith(".csv") && !name.exists(c => c == '\n' || c == '\r')
+      }
       .map(_.getPath.toString).toSeq
     val freshPaths = listed.filterNot(done).sorted
     if (freshPaths.isEmpty) return
@@ -231,8 +253,10 @@ object BtcPipeline {
     // and both steps throw on failure — a silently-lost ledger would make
     // the next backfill reprocess everything
     val tmpP = new Path(ledgerPath + ".tmp")
-    (done.toSeq ++ freshPaths).sorted.toDF("path").coalesce(1)
-      .write.mode("overwrite").parquet(tmpP.toString)
+    val out = ledgerFs.create(new Path(tmpP, ledgerFile), true)
+    try out.write((done.toSeq ++ freshPaths).sorted.mkString("", "\n", "\n")
+      .getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    finally out.close()
     if (ledgerFs.exists(ledgerP) && !ledgerFs.delete(ledgerP, true))
       throw new java.io.IOException(s"failed to delete old ledger at $ledgerP")
     if (!ledgerFs.rename(tmpP, ledgerP))

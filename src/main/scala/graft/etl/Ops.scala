@@ -63,14 +63,14 @@ object Ops {
     * (huge) fact side. If a deployment's ledger ever outgrows the
     * broadcast budget, drop the hint and let AQE pick shuffle vs
     * broadcast at runtime. Catalog key `antijoin_processed`;
-    * `BtcPipeline.backfill` no longer calls it — it filters its listing
-    * against the ledger on the driver. */
+    * `BtcPipeline.backfill` does not call it — it keeps a text ledger and
+    * filters its listing against it on the driver. */
   def antiJoinLedger(df: DataFrame, ledger: DataFrame, keyCol: String): DataFrame =
     df.join(broadcast(ledger.select(keyCol).distinct()), Seq(keyCol), "left_anti")
 
   /** #12 ledger_append (utils.py:32-36): ledger ∪ newly-processed keys.
-    * Catalog key `ledger_append`; `BtcPipeline.backfill` no longer calls it
-    * — it writes its new ledger from the driver-side path set. */
+    * Catalog key `ledger_append`; `BtcPipeline.backfill` does not call it
+    * — it writes its text ledger from the driver-side path set. */
   def ledgerAppend(ledger: DataFrame, processed: DataFrame): DataFrame =
     ledger.unionByName(processed).distinct()
 }

@@ -14,9 +14,10 @@ import graft.etl.{BtcPipeline, ParquetMigrate}
 
 /** Incremental cost and exactly-once behaviour of the backfill and the
   * watch tail on tiny inline CSVs: the sink probe reads only the `date=`
-  * directories a batch touches, the ledger is filtered on the driver, the
-  * fresh files are selected by name in the file index, and a batch's dates
-  * are written by parallel writers, one file per date. */
+  * directories a batch touches, the ledger is a text file read, filtered
+  * and written on the driver, the fresh files are selected by name in the
+  * file index, and a batch's dates are written by parallel writers, one
+  * file per date. */
 class BtcPipelineIncrementSpec extends SparkSpec {
 
   private val header =
@@ -42,10 +43,20 @@ class BtcPipelineIncrementSpec extends SparkSpec {
   private def sinkRows(sink: String, day: String): Long =
     spark.read.parquet(sink).filter(col("date") === lit(day)).count()
 
-  private def ledgerPaths(ledger: String): Set[String] = {
-    import spark.implicits._
-    spark.read.parquet(ledger).as[String].collect().toSet
-  }
+  /** The lines of the ledger's one file, in file order. */
+  private def ledgerLines(ledger: String): Seq[String] =
+    Files.readAllLines(Paths.get(ledger, "paths.txt")).asScala.toSeq
+
+  private def ledgerPaths(ledger: String): Set[String] = ledgerLines(ledger).toSet
+
+  /** The data files of a directory: hidden (`.crc`) and `_`-prefixed
+    * (`_SUCCESS`) names aside. */
+  private def dataFiles(dir: String): Seq[String] =
+    new java.io.File(dir).list().toSeq.filterNot(n => n.startsWith(".") || n.startsWith("_"))
+
+  private def qualified(path: String): String =
+    new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
+      .makeQualified(new Path(path)).toString
 
   /** Runs `body` and returns the descriptions of the jobs it started and
     * the bytes its tasks read. */
@@ -168,11 +179,79 @@ class BtcPipelineIncrementSpec extends SparkSpec {
       BtcPipeline.backfill(spark, src, sink, ledger)
       val before = ledgerPaths(ledger)
       assert(before.size === 2 && before.forall(_.endsWith(".csv")))
-      assert(new java.io.File(ledger).listFiles().count(_.getName.endsWith(".parquet")) === 1,
-        "the ledger is written as a single file")
+      assert(dataFiles(ledger) === Seq("paths.txt"), "the ledger is written as a single file")
       BtcPipeline.backfill(spark, src, sink, ledger)
       assert(ledgerPaths(ledger) === before)
       assert(spark.read.parquet(sink).count() === 4L)
+    }
+  }
+
+  test("a no-op rerun starts no Spark job") {
+    withScratch("nojob") { (src, sink, ledger) =>
+      writeDay(src, "2013-01-01", 2)
+      writeDay(src, "2013-01-02", 2)
+      BtcPipeline.backfill(spark, src, sink, ledger)
+      val (jobs, _) = observed(BtcPipeline.backfill(spark, src, sink, ledger))
+      assert(jobs.isEmpty, jobs.mkString("\n"))
+    }
+  }
+
+  test("the ledger is one sorted paths.txt of every listed .csv, the rejected name included") {
+    withScratch("layout") { (src, sink, ledger) =>
+      writeDay(src, "2013-01-02", 2)
+      writeDay(src, "2013-01-01", 2)
+      Files.writeString(Paths.get(s"$src/notes.csv"), s"$header\n")
+      Files.writeString(Paths.get(s"$src/readme.txt"), "not a csv\n")
+      BtcPipeline.backfill(spark, src, sink, ledger)
+      assert(dataFiles(ledger) === Seq("paths.txt"))
+      val expected = Seq("btcusd-2013-01-01.csv", "btcusd-2013-01-02.csv", "notes.csv")
+        .map(n => qualified(s"$src/$n"))
+      assert(Files.readString(Paths.get(ledger, "paths.txt")) === expected.mkString("", "\n", "\n"))
+    }
+  }
+
+  test("a crash between the ledger's delete and rename: the next backfill replays to zero rows") {
+    withScratch("swap") { (src, sink, ledger) =>
+      writeDay(src, "2013-01-01", 3)
+      writeDay(src, "2013-01-02", 4)
+      BtcPipeline.backfill(spark, src, sink, ledger)
+      // the state the swap leaves when it stops after the delete: the new
+      // ledger complete under ledger.tmp, no ledger
+      Files.move(Paths.get(ledger), Paths.get(s"$ledger.tmp"))
+      writeDay(src, "2013-01-03", 5)
+      BtcPipeline.backfill(spark, src, sink, ledger)
+      assert(Seq("2013-01-01", "2013-01-02", "2013-01-03").map(sinkRows(sink, _)) === Seq(3L, 4L, 5L))
+      val lines = ledgerLines(ledger)
+      assert(lines.size === 3 && lines.distinct === lines, lines)
+      assert(!Files.exists(Paths.get(s"$ledger.tmp")))
+    }
+  }
+
+  test("a ledger directory in the old parquet format fails the backfill before any write") {
+    withScratch("oldformat") { (src, sink, ledger) =>
+      import spark.implicits._
+      writeDay(src, "2013-01-01", 3)
+      BtcPipeline.backfill(spark, src, sink, ledger)
+      val old = ledgerLines(ledger)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ledger))
+      old.toDF("path").coalesce(1).write.parquet(ledger)
+      writeDay(src, "2013-01-02", 5)
+      val e = intercept[java.io.FileNotFoundException](BtcPipeline.backfill(spark, src, sink, ledger))
+      assert(e.getMessage.contains("paths.txt"), e.getMessage)
+      assert(sinkFiles(sink).keySet === Set("2013-01-01"))
+      assert(spark.read.parquet(sink).count() === 3L)
+    }
+  }
+
+  test("a file name with a line break is not listed, so a rerun stays a no-op") {
+    withScratch("linebreak") { (src, sink, ledger) =>
+      writeDay(src, "2013-01-01", 2)
+      Files.writeString(Paths.get(s"$src/btcusd-2013-01-0\n2.csv"), s"$header\n")
+      BtcPipeline.backfill(spark, src, sink, ledger)
+      val (jobs, _) = observed(BtcPipeline.backfill(spark, src, sink, ledger))
+      assert(jobs.isEmpty, jobs.mkString("\n"))
+      assert(ledgerLines(ledger) === Seq(qualified(s"$src/btcusd-2013-01-01.csv")))
+      assert(spark.read.parquet(sink).count() === 2L)
     }
   }
 
