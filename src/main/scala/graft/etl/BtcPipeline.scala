@@ -1,8 +1,12 @@
 package graft.etl
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
+import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Batch backfill pipeline over a directory of `btcusd-YYYY-MM-DD.csv`
   * minute-bar files — the reference's main path (btc_etl.py:104-147)
@@ -14,10 +18,13 @@ import org.apache.spark.sql.functions._
   *     files the unit of parallelism stays the file — no shuffle anywhere
   *     in the transform (scan -> filter -> project is narrow),
   *   - the file name comes from the `_metadata.file_name` constant
-  *     column, so the name-validity filter and the backfill's fresh-file
-  *     selection are pruned in the file index on the driver: rejected and
-  *     already-ingested files are never opened, and one root path needs no
-  *     listing job however many files it holds,
+  *     column, so the name-validity filter is pruned in the file index on
+  *     the driver: rejected files are never opened,
+  *   - each directory is listed once, on the driver, and that listing is
+  *     handed to the reader (`readListed`): the backfill reads exactly its
+  *     fresh source files and the sink probe exactly the `date=`
+  *     directories it found, and neither starts a Spark listing job however
+  *     many files or partitions it covers,
   *   - the ledger (processed FILE paths) is one text file that the driver
   *     reads and writes through the Hadoop FileSystem API and filters the
   *     listing against; no Spark job touches it, so a no-op rerun runs
@@ -64,6 +71,32 @@ object BtcPipeline {
 
   /** The one file of a backfill ledger directory. */
   private val ledgerFile = "paths.txt"
+
+  /** A read of files the driver has already listed: `listed` pairs each
+    * qualified root directory with its files, and the file index takes
+    * them from a cache that holds exactly that listing, so Spark lists
+    * nothing again (a path read lists its roots itself, with a Spark job
+    * past `spark.sql.sources.parallelPartitionDiscovery.threshold` roots).
+    * The cache is this read's own rather than the session's
+    * `FileStatusCache`, which a session may disable or evict from: the
+    * index would then list each root whole, and a backfill would read
+    * files its ledger already holds. */
+  private def readListed(
+      spark: SparkSession,
+      format: FileFormat,
+      schema: StructType,
+      options: Map[String, String],
+      listed: Seq[(Path, Array[FileStatus])]): DataFrame = {
+    val byRoot = listed.toMap
+    val cache = new FileStatusCache {
+      override def getLeafFiles(path: Path): Option[Array[FileStatus]] = byRoot.get(path)
+      override def putLeafFiles(path: Path, files: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, listed.map(_._1), options, Some(schema), cache)
+    spark.baseRelationToDataFrame(
+      HadoopFsRelation(index, new StructType(), schema, None, format, options)(spark))
+  }
 
   /** Validate + transform: the per-file ETL (btc_etl.py:150-176) over a raw
     * CSV frame, batch or streaming, read with `csvOptions` and
@@ -147,33 +180,48 @@ object BtcPipeline {
   }
 
   /** Cross-batch PRIMARY KEY enforcement (btc_etl.py:74): drop incoming
-    * rows whose `date_time` already exists in the sink. Probes
-    * `sink/date=D` through the Hadoop FileSystem for each of the batch's
-    * dates and reads only the directories that exist, so the cost is
-    * bounded by the batch's date span, never by the sink's partition
-    * count. The explicit read schema keeps an empty or half-committed
-    * `date=` directory from failing schema inference. When none of the
-    * batch's dates is in the sink (every new day) the batch comes back
-    * unchanged: no sink read, no join. */
+    * rows whose `date_time` already exists in the sink. Lists
+    * `sink/date=D` through the Hadoop FileSystem (one `listStatus` on the
+    * driver) for each of the batch's dates and reads only the data files
+    * found there, handed to the reader by `readListed`, so the cost is
+    * bounded by the batch's date span, never by the sink's partition count,
+    * and no Spark listing job runs however many dates are present. Data
+    * files are regular files whose names start with neither `_` nor `.`; a
+    * missing directory, or one without data files (a `_temporary` left by a
+    * half-committed write), counts as absent. When none of the batch's
+    * dates is in the sink (every new day) the batch comes back unchanged:
+    * no sink read, no join. */
   private[graft] def antiJoinSinkDates(
       spark: SparkSession,
       batch: DataFrame,
       sinkPath: String,
       dates: Seq[java.sql.Date]): DataFrame = {
     val fs = new Path(sinkPath).getFileSystem(spark.sessionState.newHadoopConf())
-    val present = dates.distinct.map(d => new Path(sinkPath, s"date=$d")).filter(fs.exists)
+    val present = dates.distinct.flatMap { d =>
+      val dir = fs.makeQualified(new Path(sinkPath, s"date=$d"))
+      val files =
+        try fs.listStatus(dir).filter { st =>
+          val name = st.getPath.getName
+          st.isFile && !name.startsWith("_") && !name.startsWith(".")
+        }
+        catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+      Option.when(files.nonEmpty)(dir -> files)
+    }
     if (present.isEmpty) batch
     else {
-      val existing = spark.read.schema("date_time TIMESTAMP")
-        .parquet(present.map(_.toString): _*)
+      val existing = readListed(spark, new ParquetFileFormat,
+        StructType.fromDDL("date_time TIMESTAMP"), Map.empty, present)
       batch.join(existing, Seq("date_time"), "left_anti")
     }
   }
 
-  /** Full backfill with FILE-level skip: the listing is filtered against
-    * the ledger on the driver, before any data is read — the job scans
-    * only the not-yet-ingested delta, exactly like the reference's
-    * is_processed check before pd.read_csv (btc_etl.py:115,130,152). Then:
+  /** Full backfill with FILE-level skip: the one `listStatus` of `srcDir`
+    * is filtered against the ledger on the driver, before any data is read,
+    * and `readListed` hands the fresh files of that listing to the reader —
+    * the job scans only the not-yet-ingested delta, exactly like the
+    * reference's is_processed check before pd.read_csv
+    * (btc_etl.py:115,130,152), and Spark never lists `srcDir` itself (a
+    * file in a subdirectory is not read). Then:
     * transform the delta, dedup the PK within the batch (btc_etl.py:74 — a
     * duplicate `date_time` would abort the reference file's insert;
     * dedupPk keeps the lexicographically-smallest metric row, so the
@@ -222,31 +270,26 @@ object BtcPipeline {
     // ledger lines, so it is not listed at all.
     val srcP = new Path(srcDir)
     val srcFs = srcP.getFileSystem(hconf)
-    val listed = srcFs.listStatus(srcP)
-      .filter { st =>
-        val name = st.getPath.getName
-        st.isFile && name.endsWith(".csv") && !name.exists(c => c == '\n' || c == '\r')
-      }
-      .map(_.getPath.toString).toSeq
-    val freshPaths = listed.filterNot(done).sorted
-    if (freshPaths.isEmpty) return
+    val fresh = srcFs.listStatus(srcP).filter { st =>
+      val name = st.getPath.getName
+      st.isFile && name.endsWith(".csv") && !name.exists(c => c == '\n' || c == '\r') &&
+        !done(st.getPath.toString)
+    }
+    if (fresh.isEmpty) return
 
-    // the fresh files are selected by NAME on the one-root read of srcDir:
-    // the filter is pruned in the file index, so only they are opened and
-    // no listing job runs (explicit paths past 32 would start one); a name
-    // identifies a file because `listed` covers one directory level
-    val freshNames = freshPaths.map(p => p.substring(p.lastIndexOf('/') + 1))
-    val raw = spark.read.options(csvOptions).schema(Schemas.btcCsv).csv(srcDir)
-      .filter(col("_metadata.file_name").isin(freshNames: _*))
-    val fresh = dedupPk(shape(raw)).withColumn("date", to_date(col("date_time")))
+    // the reader gets exactly the fresh files of this one listing, so only
+    // they are opened and Spark lists srcDir no second time
+    val raw = readListed(spark, new CSVFileFormat, Schemas.btcCsv, csvOptions,
+      Seq(srcFs.makeQualified(srcP) -> fresh))
+    val batch = dedupPk(shape(raw)).withColumn("date", to_date(col("date_time")))
 
     // cross-batch PK scope derived from the FILENAMES (metadata, no data
     // scan): every surviving row's date is its file's date
-    val batchDates = freshNames
+    val batchDates = fresh.map(_.getPath.getName).toSeq
       .filter(_.matches(Schemas.filenameRegex))
       .flatMap(n => scala.util.Try(java.sql.Date.valueOf(n.substring(7, 17))).toOption)
 
-    appendBatch(antiJoinSinkDates(spark, fresh, sinkPath, batchDates).drop("date"),
+    appendBatch(antiJoinSinkDates(spark, batch, sinkPath, batchDates).drop("date"),
       ParquetSink(sinkPath), batchDates.size)
 
     // swap: the NEW ledger is fully written before the old one is touched,
@@ -254,7 +297,7 @@ object BtcPipeline {
     // the next backfill reprocess everything
     val tmpP = new Path(ledgerPath + ".tmp")
     val out = ledgerFs.create(new Path(tmpP, ledgerFile), true)
-    try out.write((done.toSeq ++ freshPaths).sorted.mkString("", "\n", "\n")
+    try out.write((done.toSeq ++ fresh.map(_.getPath.toString)).sorted.mkString("", "\n", "\n")
       .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
     if (ledgerFs.exists(ledgerP) && !ledgerFs.delete(ledgerP, true))

@@ -15,9 +15,9 @@ import graft.etl.{BtcPipeline, ParquetMigrate}
 /** Incremental cost and exactly-once behaviour of the backfill and the
   * watch tail on tiny inline CSVs: the sink probe reads only the `date=`
   * directories a batch touches, the ledger is a text file read, filtered
-  * and written on the driver, the fresh files are selected by name in the
-  * file index, and a batch's dates are written by parallel writers, one
-  * file per date. */
+  * and written on the driver, the driver's listings of the source and the
+  * sink are handed to the reader (no Spark listing job), and a batch's
+  * dates are written by parallel writers, one file per date. */
 class BtcPipelineIncrementSpec extends SparkSpec {
 
   private val header =
@@ -155,7 +155,46 @@ class BtcPipelineIncrementSpec extends SparkSpec {
       val batch = batchAt("2013-01-05 00:00:00", "2013-01-05 00:01:00")
       val out = BtcPipeline.antiJoinSinkDates(spark, batch, sink,
         Seq(java.sql.Date.valueOf("2013-01-05")))
+      assert(out eq batch, "a date= directory without data files counts as absent: no read, no join")
       assert(out.count() === 2L)
+    }
+  }
+
+  test("a replay over 40 present dates opens the sink without a listing job") {
+    withScratch("replay40") { (src, sink, ledger) =>
+      days(40).foreach(writeDay(src, _, 2))
+      BtcPipeline.backfill(spark, src, sink, ledger)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ledger))
+      val (jobs, _) = observed(BtcPipeline.backfill(spark, src, sink, ledger))
+      assert(!jobs.exists(_.startsWith("Listing leaf files")), jobs.mkString("\n"))
+      assert(spark.read.parquet(sink).count() === 80L)
+    }
+  }
+
+  test("a file in a subdirectory of the source is not read, even under a fresh day's name") {
+    withScratch("subdir") { (src, sink, ledger) =>
+      writeDay(src, "2013-01-01", 3)
+      new java.io.File(s"$src/old").mkdirs()
+      writeDay(s"$src/old", "2013-01-01", 7)
+      BtcPipeline.backfill(spark, src, sink, ledger)
+      assert(sinkRows(sink, "2013-01-01") === 3L)
+      assert(ledgerLines(ledger) === Seq(qualified(s"$src/btcusd-2013-01-01.csv")))
+    }
+  }
+
+  test("a session without a file status cache still reads only the fresh files") {
+    withScratch("nocache") { (src, sink, ledger) =>
+      val key = "spark.sql.hive.manageFilesourcePartitions"
+      val prior = spark.conf.getOption(key)
+      spark.conf.set(key, "false")
+      try {
+        writeDay(src, "2013-01-01", 3)
+        BtcPipeline.backfill(spark, src, sink, ledger)
+        writeDay(src, "2013-01-02", 4)
+        BtcPipeline.backfill(spark, src, sink, ledger)
+      } finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+      assert(sinkRows(sink, "2013-01-01") === 3L)
+      assert(sinkRows(sink, "2013-01-02") === 4L)
     }
   }
 
