@@ -1,10 +1,13 @@
 package graft.etl
 
-import org.apache.hadoop.fs.{FileStatus, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.{FileFormat, FileStatusCache, HadoopFsRelation, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.csv.CSVFileFormat
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.execution.streaming.{Offset => SourceOffset}
+import org.apache.spark.sql.execution.streaming.checkpointing.OffsetSeqLog
+import org.apache.spark.sql.execution.streaming.runtime.{FileStreamSourceLog, FileStreamSourceOffset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -29,6 +32,14 @@ import org.apache.spark.sql.types.StructType
   *     reads and writes through the Hadoop FileSystem API and filters the
   *     listing against; no Spark job touches it, so a no-op rerun runs
   *     none at all,
+  *   - a batch shuffles once: the rows hash on their date, and the PK
+  *     dedup and the partitioned write both run on that partitioning
+  *     (a row's date is a function of its key), after the sink anti-join
+  *     has dropped the keys the sink already holds,
+  *   - a batch's dates come from file names on the driver, never from a
+  *     job: the backfill's from its listing, a watch trigger's from the
+  *     file source's own log in the checkpoint, so a trigger runs one
+  *     shuffle stage and one write and caches nothing,
   *   - the sink partitions by date, so downstream reads prune by time like
   *     the reference's TimescaleDB hypertable (btc_etl.py:99-101).
   */
@@ -53,19 +64,31 @@ object BtcPipeline {
     * per date. `dates` is the number of dates in the batch; left out, the
     * cluster's parallelism alone caps the writers. JDBC: batched inserts
     * through the pooled writer; PK enforcement is the database's
-    * (btc_etl.py:74), so no anti-join is needed on that path. Both backfill
-    * and the watch foreachBatch write through here. */
+    * (btc_etl.py:74), so no anti-join is needed on that path. Backfill and
+    * watch do not come through here: their `dedupPk` has already
+    * partitioned the batch on `date`, and they write it with `writeByDate`
+    * directly. */
   def appendBatch(df: DataFrame, target: SinkTarget, dates: Int = Int.MaxValue): Unit =
     target match {
       case ParquetSink(path) =>
-        val writers = math.max(1, math.min(dates, df.sparkSession.sparkContext.defaultParallelism))
-        df.withColumn("date", to_date(col("date_time")))
-          .select((Schemas.sinkCols :+ "date").map(col): _*)
-          .repartition(writers, col("date"))
-          .write.mode("append").partitionBy("date").parquet(path)
+        writeByDate(df.withColumn("date", to_date(col("date_time")))
+          .repartition(writers(df.sparkSession, dates), col("date")), path)
       case JdbcTarget(o) =>
         graft.sources.JdbcSink.append(df, o)
     }
+
+  /** The writer count for a batch of `dates` dates. */
+  private def writers(spark: SparkSession, dates: Int): Int =
+    math.max(1, math.min(dates, spark.sparkContext.defaultParallelism))
+
+  /** The partitioned append of a frame that is already hash-partitioned on
+    * its `date` column: each partition is one writer task, and no exchange
+    * is added. A second `repartition(writers, date)` is not a safe no-op:
+    * with one writer it plans a `SinglePartition` exchange, which Spark
+    * does not collapse into the first. */
+  private def writeByDate(df: DataFrame, path: String): Unit =
+    df.select((Schemas.sinkCols :+ "date").map(col): _*)
+      .write.mode("append").partitionBy("date").parquet(path)
 
   private val csvOptions = Map("header" -> "true", "pathGlobFilter" -> "*.csv")
 
@@ -135,7 +158,17 @@ object BtcPipeline {
     * date-partitioned sink as the backfill. Returns the running query —
     * callers stop() it (prod would awaitTermination). On a first start with
     * a fresh checkpoint the source lists existing files too, so a single
-    * streaming query covers backfill+watch (SURVEY §2.1 #19). */
+    * streaming query covers backfill+watch (SURVEY §2.1 #19).
+    *
+    * Each trigger runs `ingest`, the backfill's plan, with its dates taken
+    * from the checkpoint rather than from the data: `offsets/N` holds the
+    * file source's end offset for trigger N, and the source's metadata log
+    * (`sources/0`) names the files of the log entries in
+    * `(end(N - 1), end(N)]`, the range `FileStreamSource.getBatch` reads
+    * (its `get` finds entries folded into an `N.compact` file too). Both
+    * logs are written before the trigger runs, so a trigger replayed after
+    * a restart finds the same files. A trigger therefore starts no job to
+    * learn its dates and caches nothing. */
   def watch(
       spark: SparkSession,
       srcDir: String,
@@ -146,23 +179,29 @@ object BtcPipeline {
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
       .csv(srcDir))
 
+    // opened on the first trigger, after the query has created them
+    lazy val offsetLog = new OffsetSeqLog(spark, s"$checkpoint/offsets")
+    lazy val sourceLog =
+      new FileStreamSourceLog(FileStreamSourceLog.VERSION, spark, s"$checkpoint/sources/0")
+    def sourceEnd(batchId: Long): Long =
+      if (batchId < 0) -1L
+      else offsetLog.get(batchId).flatMap(_.offsets.head) match {
+        case Some(o: SourceOffset) => FileStreamSourceOffset(o).logOffset
+        case other => throw new IllegalStateException(
+          s"no file source offset for batch $batchId in $checkpoint/offsets: $other")
+      }
+
     shaped.writeStream
       .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // within-batch deterministic PK dedup + cross-batch PK anti-join
         // against the sink: together these give the reference's global
         // `date_time PRIMARY KEY` semantics (btc_etl.py:74) — and make the
         // at-least-once foreachBatch replay after a crash effectively
         // exactly-once (replayed rows hit the anti-join and vanish)
-        val sess = batch.sparkSession
-        val b = dedupPk(batch).withColumn("date", to_date(col("date_time")))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        try {
-          val dates = b.select(col("date")).distinct().collect()
-            .map(_.getDate(0)).toSeq
-          appendBatch(antiJoinSinkDates(sess, b, sinkPath, dates).drop("date"),
-            ParquetSink(sinkPath), dates.size)
-        } finally { b.unpersist(); () }
+        val names = sourceLog.get(Some(sourceEnd(batchId - 1) + 1), Some(sourceEnd(batchId)))
+          .flatMap(_._2).map(_.sparkPath.toPath.getName).toSeq
+        ingest(batch.sparkSession, batch, sinkPath, fileDates(names))
       }
       .start()
   }
@@ -171,26 +210,50 @@ object BtcPipeline {
     * lexicographically-smallest metric tuple (min over a struct of the sink
     * metric columns). Unlike dropDuplicates — whose survivor depends on
     * partitioning and task order — reruns produce identical sink contents,
-    * matching the repo's cross-engine determinism stance. */
-  private[graft] def dedupPk(df: DataFrame): DataFrame = {
+    * matching the repo's cross-engine determinism stance.
+    *
+    * The rows hash on `date = to_date(date_time)` into the batch's
+    * `writers(dates)` partitions and group by `(date, date_time)`. The date
+    * is a function of the key, so the dedup is exact, and the date
+    * partitioning already meets the aggregate's distribution: this is the
+    * batch's one exchange, and the output (sink columns, then `date`)
+    * is ready for `writeByDate`. `dates` is the number of dates in the
+    * batch; left out, the cluster's parallelism sets the partition count. */
+  private[graft] def dedupPk(df: DataFrame, dates: Int = Int.MaxValue): DataFrame = {
     val metrics = Schemas.sinkCols.filterNot(_ == "date_time")
-    df.groupBy("date_time")
+    df.withColumn("date", to_date(col("date_time")))
+      .repartition(writers(df.sparkSession, dates), col("date"))
+      .groupBy("date", "date_time")
       .agg(min(struct(metrics.map(col): _*)).as("_m"))
-      .select(col("date_time") +: metrics.map(m => col(s"_m.$m").as(m)): _*)
+      .select((col("date_time") +: metrics.map(m => col(s"_m.$m").as(m))) :+ col("date"): _*)
   }
+
+  /** The data files of `dir`: regular files whose names start with neither
+    * `_` nor `.`. A missing `dir` has none. */
+  private[graft] def dataFiles(fs: FileSystem, dir: Path): Array[FileStatus] =
+    try fs.listStatus(dir).filter { st =>
+      val name = st.getPath.getName
+      st.isFile && !name.startsWith("_") && !name.startsWith(".")
+    }
+    catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
 
   /** Cross-batch PRIMARY KEY enforcement (btc_etl.py:74): drop incoming
     * rows whose `date_time` already exists in the sink. Lists
     * `sink/date=D` through the Hadoop FileSystem (one `listStatus` on the
     * driver) for each of the batch's dates and reads only the data files
-    * found there, handed to the reader by `readListed`, so the cost is
-    * bounded by the batch's date span, never by the sink's partition count,
-    * and no Spark listing job runs however many dates are present. Data
-    * files are regular files whose names start with neither `_` nor `.`; a
-    * missing directory, or one without data files (a `_temporary` left by a
-    * half-committed write), counts as absent. When none of the batch's
-    * dates is in the sink (every new day) the batch comes back unchanged:
-    * no sink read, no join. */
+    * found there (`dataFiles`), handed to the reader by `readListed`, so
+    * the cost is bounded by the batch's date span, never by the sink's
+    * partition count, and no Spark listing job runs however many dates are
+    * present. A missing directory, or one without data files (a
+    * `_temporary` left by a half-committed write), counts as absent. When
+    * none of the batch's dates is in the sink (every new day) the batch
+    * comes back unchanged: no sink read, no join.
+    *
+    * `ingest` runs this before the dedup's exchange: it removes whole
+    * keys, so every surviving key keeps its rows and its survivor, and a
+    * full replay shuffles nothing. The sink's keys are broadcast: at most
+    * 1,440 a batch date (one a minute), so the broadcast grows with the
+    * batch, never with the sink. */
   private[graft] def antiJoinSinkDates(
       spark: SparkSession,
       batch: DataFrame,
@@ -199,21 +262,33 @@ object BtcPipeline {
     val fs = new Path(sinkPath).getFileSystem(spark.sessionState.newHadoopConf())
     val present = dates.distinct.flatMap { d =>
       val dir = fs.makeQualified(new Path(sinkPath, s"date=$d"))
-      val files =
-        try fs.listStatus(dir).filter { st =>
-          val name = st.getPath.getName
-          st.isFile && !name.startsWith("_") && !name.startsWith(".")
-        }
-        catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+      val files = dataFiles(fs, dir)
       Option.when(files.nonEmpty)(dir -> files)
     }
     if (present.isEmpty) batch
     else {
       val existing = readListed(spark, new ParquetFileFormat,
         StructType.fromDDL("date_time TIMESTAMP"), Map.empty, present)
-      batch.join(existing, Seq("date_time"), "left_anti")
+      batch.join(broadcast(existing), Seq("date_time"), "left_anti")
     }
   }
+
+  /** The one plan of a backfill batch and a watch trigger, over the shaped
+    * rows of files whose names give `dates`: anti-join against the sink,
+    * one date shuffle with the PK dedup on it, partitioned write. */
+  private def ingest(
+      spark: SparkSession,
+      shaped: DataFrame,
+      sinkPath: String,
+      dates: Seq[java.sql.Date]): Unit =
+    writeByDate(dedupPk(antiJoinSinkDates(spark, shaped, sinkPath, dates), dates.size), sinkPath)
+
+  /** The dates named by the valid day files among `names`: metadata only,
+    * no data scan. Every row `shape` keeps carries its file's date. */
+  private def fileDates(names: Seq[String]): Seq[java.sql.Date] =
+    names.filter(_.matches(Schemas.filenameRegex))
+      .flatMap(n => scala.util.Try(java.sql.Date.valueOf(n.substring(7, 17))).toOption)
+      .distinct
 
   /** Full backfill with FILE-level skip: the one `listStatus` of `srcDir`
     * is filtered against the ledger on the driver, before any data is read,
@@ -221,17 +296,18 @@ object BtcPipeline {
     * the job scans only the not-yet-ingested delta, exactly like the
     * reference's is_processed check before pd.read_csv
     * (btc_etl.py:115,130,152), and Spark never lists `srcDir` itself (a
-    * file in a subdirectory is not read). Then:
-    * transform the delta, dedup the PK within the batch (btc_etl.py:74 — a
-    * duplicate `date_time` would abort the reference file's insert;
-    * dedupPk keeps the lexicographically-smallest metric row, so the
-    * survivor is partitioning-independent), drop rows whose key already
-    * exists in the sink (cross-batch PK, antiJoinSinkDates — a replayed
-    * file after ledger loss adds zero rows), append to the
-    * date-partitioned sink, and rewrite the ledger last (sink-then-ledger
-    * ordering: a crash between the two reprocesses the file into an
-    * idempotent partitioned sink rather than losing it — same
-    * at-least-once stance as btc_etl.py:144,180, upgraded by the
+    * file in a subdirectory is not read). Then `ingest`, the plan a watch
+    * trigger runs too: transform the delta, drop rows whose key already
+    * exists in the sink (cross-batch PK, antiJoinSinkDates, probing the
+    * dates the fresh file names give — a replayed file after ledger loss
+    * adds zero rows), dedup the PK within the batch on one date shuffle
+    * (btc_etl.py:74 — a duplicate `date_time` would abort the reference
+    * file's insert; dedupPk keeps the lexicographically-smallest metric
+    * row, so the survivor is partitioning-independent), append to the
+    * date-partitioned sink on that partitioning, and rewrite the ledger
+    * last (sink-then-ledger ordering: a crash between the two reprocesses
+    * the file into an idempotent partitioned sink rather than losing it —
+    * same at-least-once stance as btc_etl.py:144,180, upgraded by the
     * streaming checkpoint in the watch phase).
     *
     * The ledger is the directory `ledgerPath` holding one UTF-8 file,
@@ -281,16 +357,7 @@ object BtcPipeline {
     // they are opened and Spark lists srcDir no second time
     val raw = readListed(spark, new CSVFileFormat, Schemas.btcCsv, csvOptions,
       Seq(srcFs.makeQualified(srcP) -> fresh))
-    val batch = dedupPk(shape(raw)).withColumn("date", to_date(col("date_time")))
-
-    // cross-batch PK scope derived from the FILENAMES (metadata, no data
-    // scan): every surviving row's date is its file's date
-    val batchDates = fresh.map(_.getPath.getName).toSeq
-      .filter(_.matches(Schemas.filenameRegex))
-      .flatMap(n => scala.util.Try(java.sql.Date.valueOf(n.substring(7, 17))).toOption)
-
-    appendBatch(antiJoinSinkDates(spark, batch, sinkPath, batchDates).drop("date"),
-      ParquetSink(sinkPath), batchDates.size)
+    ingest(spark, shape(raw), sinkPath, fileDates(fresh.map(_.getPath.getName).toSeq))
 
     // swap: the NEW ledger is fully written before the old one is touched,
     // and both steps throw on failure — a silently-lost ledger would make

@@ -15,6 +15,17 @@ import graft.queries.Staging._
   */
 object StreamQueries {
 
+  /** A foreachBatch body's parquet state at `dir`, read with the `schema`
+    * it is written with, or None before its first write. The state exists
+    * once `dir` holds a data file (`BtcPipeline.dataFiles`), so a read or
+    * schema error of a present state fails the query instead of resetting
+    * the state to the first batch's. */
+  private[graft] def priorState(spark: SparkSession, dir: String, schema: StructType): Option[DataFrame] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    Option.when(graft.etl.BtcPipeline.dataFiles(fs, p).nonEmpty)(spark.read.schema(schema).parquet(dir))
+  }
+
   /** #16 stream_file_source: stage events as an 8-file CSV directory, drain
     * it through a real micro-batch streaming query (maxFilesPerTrigger=2 ->
     * 4 micro-batches), transform rows exactly like the batch path, append
@@ -1190,12 +1201,7 @@ object StreamQueries {
       .option("checkpointLocation", tmpDir("slpckpt"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val b = batch.graftCheckpoint() // batch is consumed twice (pairs + history append)
-        // first-batch case only: path-not-found is an AnalysisException;
-        // any OTHER read failure must propagate — a broad catch here
-        // would silently drop the accumulated history (advisor finding)
-        val histDf =
-          try b.sparkSession.read.parquet(hist)
-          catch { case _: org.apache.spark.sql.AnalysisException => b.limit(0) }
+        val histDf = priorState(b.sparkSession, hist, b.schema).getOrElse(b.limit(0))
         // r17: size-ADAPTIVE tier (Linkage.pairsIncrementalAdaptive) —
         // the exhaustive block cross and the bounded deletion-core tier
         // emit IDENTICAL pairs (completeness theorem, spec-pinned), so
@@ -1294,16 +1300,13 @@ object StreamQueries {
       .option("checkpointLocation", tmpDir("simvckpt"))
       .foreachBatch { (batch: DataFrame, _: Long) =>
         val delta = agg(batch)
-        val merged =
-          try delta.sparkSession.read.parquet(mvPath)
-            .groupBy("month", "priority") // partial-row merge across files
+        val merged = priorState(delta.sparkSession, mvPath, delta.schema).fold(delta) { mv =>
+          mv.groupBy("month", "priority") // partial-row merge across files
             .agg(sum("n_orders").as("n_orders"), sum("rev_cents").as("rev_cents"))
             .unionByName(delta)
             .groupBy("month", "priority")
             .agg(sum("n_orders").as("n_orders"), sum("rev_cents").as("rev_cents"))
-          // path-not-found = first batch; real read errors propagate
-          // rather than silently resetting the MV to this batch's delta
-          catch { case _: org.apache.spark.sql.AnalysisException => delta }
+        }
         // write-then-swap: materialise the merge before overwriting the MV
         val out = merged.graftCheckpoint()
         out.write.mode("overwrite").parquet(mvPath)
@@ -1343,9 +1346,7 @@ object StreamQueries {
           expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)").as("cents"),
           datediff(col("o_orderdate"), lit("1970-01-01").cast("date"))
             .cast("long").as("days"))
-        val prev = // path-not-found = first batch; real errors propagate
-          try pts.sparkSession.read.parquet(front)
-          catch { case _: org.apache.spark.sql.AnalysisException => pts.limit(0) }
+        val prev = priorState(pts.sparkSession, front, pts.schema).getOrElse(pts.limit(0))
         val merged = skyline(prev.unionByName(pts)).graftCheckpoint()
         merged.write.mode("overwrite").parquet(front)
       }

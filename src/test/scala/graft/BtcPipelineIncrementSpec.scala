@@ -6,9 +6,13 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.ListenerBusDrain
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.execution.FileSourceScanExec
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
+import org.apache.spark.sql.execution.{FileSourceScanExec, QueryExecution}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
+import org.apache.spark.storage.StorageLevel
 
 import graft.etl.{BtcPipeline, ParquetMigrate}
 
@@ -16,9 +20,11 @@ import graft.etl.{BtcPipeline, ParquetMigrate}
   * watch tail on tiny inline CSVs: the sink probe reads only the `date=`
   * directories a batch touches, the ledger is a text file read, filtered
   * and written on the driver, the driver's listings of the source and the
-  * sink are handed to the reader (no Spark listing job), and a batch's
-  * dates are written by parallel writers, one file per date. */
-class BtcPipelineIncrementSpec extends SparkSpec {
+  * sink are handed to the reader (no Spark listing job), a batch's
+  * dates are written by parallel writers, one file per date, over the
+  * batch's one shuffle, and a watch trigger takes its dates from the
+  * checkpoint's source log. */
+class BtcPipelineIncrementSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private val header =
     "Time,Open,High,Low,Close,Volume_(BTC),Volume_(Currency),Weighted_Price"
@@ -58,24 +64,50 @@ class BtcPipelineIncrementSpec extends SparkSpec {
     new Path(path).getFileSystem(spark.sessionState.newHadoopConf())
       .makeQualified(new Path(path)).toString
 
-  /** Runs `body` and returns the descriptions of the jobs it started and
-    * the bytes its tasks read. */
-  private def observed(body: => Unit): (Seq[String], Long) = {
+  /** What the Spark jobs of one call did: their descriptions, the bytes
+    * their tasks read and wrote to shuffle, and the ids of the cached RDDs
+    * their stages computed. */
+  private case class Observed(jobs: Seq[String], bytesRead: Long, shuffleWritten: Long, cached: Set[Int])
+
+  /** Runs `body` and returns what its Spark jobs did. */
+  private def observed(body: => Unit): Observed = {
     val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
-    val bytesRead = new java.util.concurrent.atomic.AtomicLong
+    val cached = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val bytesRead, shuffleWritten = new java.util.concurrent.atomic.AtomicLong
     val listener = new SparkListener {
       override def onJobStart(j: SparkListenerJobStart): Unit =
         jobs.add(Option(j.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
           .getOrElse(""))
+      override def onStageSubmitted(s: SparkListenerStageSubmitted): Unit =
+        s.stageInfo.rddInfos.filter(_.storageLevel != StorageLevel.NONE).foreach(r => cached.add(r.id))
       override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
-        Option(t.taskMetrics).foreach(m => bytesRead.addAndGet(m.inputMetrics.bytesRead))
+        Option(t.taskMetrics).foreach { m =>
+          bytesRead.addAndGet(m.inputMetrics.bytesRead)
+          shuffleWritten.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+        }
     }
     val sc = spark.sparkContext
     ListenerBusDrain(sc)
     sc.addSparkListener(listener)
     try body
     finally { ListenerBusDrain(sc); sc.removeSparkListener(listener) }
-    (jobs.asScala.toSeq, bytesRead.get)
+    Observed(jobs.asScala.toSeq, bytesRead.get, shuffleWritten.get, cached.asScala.toSet)
+  }
+
+  /** Runs `body` and returns, for each query it ran, the number of shuffle
+    * exchanges in its final adaptive plan. */
+  private def exchanges(body: => Unit): Seq[Int] = {
+    val counts = new java.util.concurrent.ConcurrentLinkedQueue[Int]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        counts.add(collect(qe.executedPlan) { case e: ShuffleExchangeExec => e }.size)
+      override def onFailure(funcName: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    ListenerBusDrain(spark.sparkContext)
+    spark.listenerManager.register(listener)
+    try body
+    finally { ListenerBusDrain(spark.sparkContext); spark.listenerManager.unregister(listener) }
+    counts.asScala.toSeq
   }
 
   private def days(n: Int): Seq[String] =
@@ -165,7 +197,7 @@ class BtcPipelineIncrementSpec extends SparkSpec {
       days(40).foreach(writeDay(src, _, 2))
       BtcPipeline.backfill(spark, src, sink, ledger)
       org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ledger))
-      val (jobs, _) = observed(BtcPipeline.backfill(spark, src, sink, ledger))
+      val jobs = observed(BtcPipeline.backfill(spark, src, sink, ledger)).jobs
       assert(!jobs.exists(_.startsWith("Listing leaf files")), jobs.mkString("\n"))
       assert(spark.read.parquet(sink).count() === 80L)
     }
@@ -230,7 +262,7 @@ class BtcPipelineIncrementSpec extends SparkSpec {
       writeDay(src, "2013-01-01", 2)
       writeDay(src, "2013-01-02", 2)
       BtcPipeline.backfill(spark, src, sink, ledger)
-      val (jobs, _) = observed(BtcPipeline.backfill(spark, src, sink, ledger))
+      val jobs = observed(BtcPipeline.backfill(spark, src, sink, ledger)).jobs
       assert(jobs.isEmpty, jobs.mkString("\n"))
     }
   }
@@ -287,7 +319,7 @@ class BtcPipelineIncrementSpec extends SparkSpec {
       writeDay(src, "2013-01-01", 2)
       Files.writeString(Paths.get(s"$src/btcusd-2013-01-0\n2.csv"), s"$header\n")
       BtcPipeline.backfill(spark, src, sink, ledger)
-      val (jobs, _) = observed(BtcPipeline.backfill(spark, src, sink, ledger))
+      val jobs = observed(BtcPipeline.backfill(spark, src, sink, ledger)).jobs
       assert(jobs.isEmpty, jobs.mkString("\n"))
       assert(ledgerLines(ledger) === Seq(qualified(s"$src/btcusd-2013-01-01.csv")))
       assert(spark.read.parquet(sink).count() === 2L)
@@ -301,9 +333,9 @@ class BtcPipelineIncrementSpec extends SparkSpec {
       // 40 days together
       val bad = java.nio.file.Paths.get(s"$src/btcusd-2013-02-30.csv")
       Files.writeString(bad, (header +: Seq.fill(40000)("00:00:00,1,2,3,4,5,6,7")).mkString("\n"))
-      val (jobs, bytesRead) = observed(BtcPipeline.backfill(spark, src, sink, ledger))
-      assert(!jobs.exists(_.startsWith("Listing leaf files")), jobs.mkString("\n"))
-      assert(bytesRead < Files.size(bad), s"read $bytesRead bytes")
+      val o = observed(BtcPipeline.backfill(spark, src, sink, ledger))
+      assert(!o.jobs.exists(_.startsWith("Listing leaf files")), o.jobs.mkString("\n"))
+      assert(o.bytesRead < Files.size(bad), s"read ${o.bytesRead} bytes")
       assert(spark.read.parquet(sink).count() === 80L)
       assert(ledgerPaths(ledger).size === 41, "the rejected file is ledgered too")
     }
@@ -326,6 +358,98 @@ class BtcPipelineIncrementSpec extends SparkSpec {
       assert(after.removed(days(41).last) === files)
       assert(after(days(41).last).map(partId) === Seq(0))
       assert(sinkRows(sink, days(41).last) === 3L)
+    }
+  }
+
+  test("a watch trigger of one new day runs at most two Spark jobs and caches nothing") {
+    withScratch("trigger") { (src, sink, _) =>
+      val root = new java.io.File(sink).getParent
+      writeDay(src, "2013-01-01", 3)
+      val persistent = spark.sparkContext.getPersistentRDDs.keySet
+      val q = BtcPipeline.watch(spark, src, sink, s"$root/ckpt")
+      val o =
+        try {
+          q.processAllAvailable()
+          // written beside the source and moved in whole, so no trigger
+          // sees a half-written file
+          writeDay(root, "2013-01-02", 2)
+          observed {
+            Files.move(Paths.get(s"$root/btcusd-2013-01-02.csv"), Paths.get(s"$src/btcusd-2013-01-02.csv"),
+              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+            q.processAllAvailable()
+          }
+        } finally q.stop()
+      assert(o.jobs.size <= 2, o.jobs.mkString("\n"))
+      assert(o.cached.isEmpty, o.cached)
+      assert(spark.sparkContext.getPersistentRDDs.keySet === persistent)
+      assert(sinkRows(sink, "2013-01-01") === 3L)
+      assert(sinkRows(sink, "2013-01-02") === 2L)
+    }
+  }
+
+  test("a cold backfill and a one-day increment each plan one shuffle exchange") {
+    withScratch("oneshuffle") { (src, sink, ledger) =>
+      days(41).init.foreach(writeDay(src, _, 2))
+      assert(exchanges(BtcPipeline.backfill(spark, src, sink, ledger)).filter(_ > 0) === Seq(1))
+      writeDay(src, days(41).last, 3)
+      assert(exchanges(BtcPipeline.backfill(spark, src, sink, ledger)).filter(_ > 0) === Seq(1))
+      assert(spark.read.parquet(sink).count() === 83L)
+    }
+  }
+
+  test("a full replay after ledger loss shuffles nothing and adds nothing") {
+    withScratch("replay0") { (src, sink, ledger) =>
+      days(5).foreach(writeDay(src, _, 3))
+      BtcPipeline.backfill(spark, src, sink, ledger)
+      val before = sinkFiles(sink)
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ledger))
+      val o = observed(BtcPipeline.backfill(spark, src, sink, ledger))
+      assert(o.shuffleWritten === 0L, o.jobs.mkString("\n"))
+      assert(sinkFiles(sink) === before)
+      assert(spark.read.parquet(sink).count() === 15L)
+    }
+  }
+
+  test("a 13-trigger watch crosses the source log's compaction, and a restarted trigger adds nothing") {
+    withScratch("compact") { (src, sink, _) =>
+      val ckpt = new java.io.File(sink).getParent + "/ckpt"
+      days(13).foreach(writeDay(src, _, 3))
+      def run(): Unit = {
+        val q = BtcPipeline.watch(spark, src, sink, ckpt, maxFilesPerTrigger = 1)
+        try q.processAllAvailable() finally q.stop()
+      }
+      def keys(): (Long, Long) = {
+        val all = spark.read.parquet(sink)
+        (all.count(), all.select("date_time").distinct().count())
+      }
+      run()
+      assert(Files.exists(Paths.get(s"$ckpt/sources/0/9.compact")))
+      assert(days(13).map(sinkRows(sink, _)) === Seq.fill(13)(3L))
+      // the last trigger's commit lost: the restart runs batch 12 again
+      Files.delete(Paths.get(s"$ckpt/commits/12"))
+      Files.delete(Paths.get(s"$ckpt/commits/.12.crc"))
+      run()
+      assert(Files.exists(Paths.get(s"$ckpt/commits/12")))
+      assert(keys() === ((39L, 39L)))
+    }
+  }
+
+  test("a duplicated minute keeps its min tuple unless the sink holds it") {
+    withScratch("dupkey") { (src, sink, ledger) =>
+      writeDay(src, "2013-01-01", 3)
+      BtcPipeline.backfill(spark, src, sink, ledger)
+      // after ledger loss the day comes back with 00:01 (held by the sink)
+      // and 00:05 (not held) each twice
+      Files.writeString(Paths.get(s"$src/btcusd-2013-01-01.csv"), Seq(header,
+        "00:01:00,0,2,3,4,5,6,2", "00:01:00,9,2,3,4,5,6,2",
+        "00:05:00,9,2,3,4,5,6,7", "00:05:00,1,2,3,4,5,6,8").mkString("", "\n", "\n"))
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(ledger))
+      BtcPipeline.backfill(spark, src, sink, ledger)
+      val rows = spark.read.parquet(sink)
+        .select(date_format(col("date_time"), "HH:mm"), col("open_price"), col("weighted_price"))
+        .collect().map(r => r.getString(0) -> ((r.getDouble(1), r.getDouble(2)))).sortBy(_._1).toSeq
+      assert(rows === Seq("00:00" -> ((1.0, 1.0)), "00:01" -> ((1.0, 2.0)), "00:02" -> ((1.0, 3.0)),
+        "00:05" -> ((1.0, 8.0))))
     }
   }
 

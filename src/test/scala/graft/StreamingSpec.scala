@@ -244,6 +244,31 @@ class StreamingSpec extends SparkSpec {
     assert(commits === 3, s"expected 3 micro-batches, got $commits")
   }
 
+  test("a foreachBatch state that cannot be read fails the query instead of resetting") {
+    val src = Files.createTempDirectory("graft-state-src-").toString
+    val ckpt = Files.createTempDirectory("graft-state-ckpt-").toString
+    val state = Files.createTempDirectory("graft-state-").toString
+    writeFile(src, "a.csv", Seq((1L, 1.0)))
+    val corrupt = Paths.get(state, "part-0.parquet")
+    Files.writeString(corrupt, "not a parquet file")
+
+    val q = spark.readStream.schema(schema).option("header", "true").csv(src)
+      .writeStream.option("checkpointLocation", ckpt)
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        val prev = graft.streaming.StreamQueries.priorState(b.sparkSession, state, schema)
+          .getOrElse(b.limit(0))
+        prev.unionByName(b).localCheckpoint().write.mode("overwrite").parquet(state)
+      }
+      .start()
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](q.processAllAvailable())
+    q.stop()
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => String.valueOf(c.getMessage).contains("part-0.parquet")),
+      causes.map(_.toString).mkString("\n"))
+    assert(new java.io.File(state).list().toSeq === Seq("part-0.parquet"), "the state is kept")
+    assert(Files.readString(corrupt) === "not a parquet file")
+  }
+
   test("stream_attribution equals the batch running-window attribution exactly") {
     def key(r: org.apache.spark.sql.Row) =
       Option(r.getAs[String]("click_day")).getOrElse("NULL")
