@@ -1,29 +1,14 @@
 package graft.expressions
 
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 /** Packaging hook for external users: register the native functions at
   * session build time via
   * `--conf spark.sql.extensions=graft.expressions.GraftExtensions`
   * (or `.withExtensions(new GraftExtensions)`), instead of the lazy
-  * in-library GraftFunctions.register call. */
+  * in-library GraftFunctions.register call. Both install the one
+  * [[GraftFunctions]] table. */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def info(name: String, usage: String) =
-    new ExpressionInfo("graft.expressions", null, name, usage, "", "", "", "", "", "", "built-in")
-
-  private def litBinary(e: Expression): Array[Byte] = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(
-        v: Array[Byte], org.apache.spark.sql.types.BinaryType) => v
-    case other => throw new IllegalArgumentException(s"expected binary literal, got $other")
-  }
-
-  private def litInt(e: Expression): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case other => throw new IllegalArgumentException(s"expected int literal, got $other")
-  }
 
   override def apply(e: SparkSessionExtensions): Unit = {
     // whole-operator extension: native as-of join (logical node ->
@@ -31,59 +16,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // apply through a node it doesn't know
     e.injectPlannerStrategy(_ => new graft.plans.AsOfJoinStrategy)
     e.injectOptimizerRule(_ => graft.plans.PruneAsOfJoin)
-    e.injectFunction((FunctionIdentifier("graft_char_hash"),
-      info("graft_char_hash", "polynomial codepoint hash mod 1e9+7"),
-      (exprs: Seq[Expression]) => CharHashExpr(exprs.head)))
-    e.injectFunction((FunctionIdentifier("graft_shingle_hashes"),
-      info("graft_shingle_hashes", "word n-gram rolling hashes"),
-      (exprs: Seq[Expression]) => ShingleHashesExpr(exprs(0), litInt(exprs(1)))))
-    e.injectFunction((FunctionIdentifier("graft_minhash_sig"),
-      info("graft_minhash_sig", "minhash signature"),
-      (exprs: Seq[Expression]) => MinHashSigExpr(exprs(0), litInt(exprs(1)))))
-    e.injectFunction((FunctionIdentifier("graft_dot_long"),
-      info("graft_dot_long", "int64 dot product"),
-      (exprs: Seq[Expression]) => DotLongExpr(exprs(0), exprs(1))))
-    e.injectFunction((FunctionIdentifier("graft_dtw_band"),
-      info("graft_dtw_band", "banded dynamic-time-warping distance"),
-      (exprs: Seq[Expression]) => DtwBandExpr(exprs(0), exprs(1), litInt(exprs(2)))))
-    e.injectFunction((FunctionIdentifier("graft_quantize"),
-      info("graft_quantize", "floor(x*1e6) quantisation"),
-      (exprs: Seq[Expression]) => QuantizeExpr(exprs.head)))
-    e.injectFunction((FunctionIdentifier("graft_simhash60"),
-      info("graft_simhash60", "60-bit simhash of a token array"),
-      (exprs: Seq[Expression]) => SimHash60Expr(exprs.head)))
-    e.injectFunction((FunctionIdentifier("graft_cms_sketch"),
-      info("graft_cms_sketch", "Count-Min sketch of a bigint key column"),
-      (exprs: Seq[Expression]) => CountMinAgg(exprs(0), litInt(exprs(1)), litInt(exprs(2)))
-        .toAggregateExpression()))
-    e.injectFunction((FunctionIdentifier("graft_cms_lookup"),
-      info("graft_cms_lookup", "Count-Min estimate for a key (sketch literal unpacked once)"),
-      (exprs: Seq[Expression]) => CmsLookupExpr(exprs(0), new GraftCms(litBinary(exprs(1))))))
-    e.injectFunction((FunctionIdentifier("graft_kmv_distinct"),
-      info("graft_kmv_distinct", "KMV distinct-count sketch (k minimum values)"),
-      (exprs: Seq[Expression]) => KMVDistinctAgg(exprs(0), litInt(exprs(1))).toAggregateExpression()))
-    e.injectFunction((FunctionIdentifier("graft_ivf_cells"),
-      info("graft_ivf_cells", "top-n IVF cell ids for a quantised vector (centroid literals unpacked once)"),
-      (exprs: Seq[Expression]) => IvfCellsExpr(
-        exprs(0), exprs(1),
-        new IvfIndex(litLongArray(exprs(2)), litLongMatrix(exprs(3)), litLongArray(exprs(4))),
-        litInt(exprs(5)))))
-  }
-
-  private def litLongArray(e: Expression): Array[Long] = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(
-        v: org.apache.spark.sql.catalyst.util.ArrayData,
-        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, _)) =>
-      v.toLongArray()
-    case other => throw new IllegalArgumentException(s"expected array<bigint> literal, got $other")
-  }
-
-  private def litLongMatrix(e: Expression): Array[Array[Long]] = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(
-        v: org.apache.spark.sql.catalyst.util.ArrayData,
-        org.apache.spark.sql.types.ArrayType(
-          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.LongType, _), _)) =>
-      Array.tabulate(v.numElements())(i => v.getArray(i).toLongArray())
-    case other => throw new IllegalArgumentException(s"expected array<array<bigint>> literal, got $other")
+    GraftFunctions.functions.foreach(e.injectFunction)
   }
 }

@@ -1,13 +1,16 @@
 package graft.expressions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, LongType}
 
-/** Session registration for the native expressions (exposed to the Column
-  * API through `functions.call_function`, and to SQL by name). Idempotent;
-  * called from Staging.tbl so every query path registers lazily.
+/** The native expressions' one function table (exposed to the Column API
+  * through `functions.call_function`, and to SQL by name), and its lazy
+  * per-session registration. Idempotent; called from Staging.tbl so every
+  * query path registers lazily. [[GraftExtensions]] injects the same table
+  * at session build time.
   */
 object GraftFunctions {
 
@@ -32,6 +35,62 @@ object GraftFunctions {
     case other => throw new IllegalArgumentException(s"$what must be a binary literal, got $other")
   }
 
+  private def fn(name: String, usage: String)(builder: Seq[Expression] => Expression) =
+    (FunctionIdentifier(name),
+      new ExpressionInfo("graft.expressions", null, name, usage, "", "", "", "", "", "", "built-in"),
+      builder)
+
+  /** Every native function as (identifier, info, builder) — the shape
+    * `SparkSessionExtensions.injectFunction` takes. */
+  private[expressions] val functions = Seq(
+    fn("graft_char_hash", "polynomial codepoint hash mod 1e9+7")(
+      exprs => CharHashExpr(exprs.head)),
+    fn("graft_shingle_hashes", "word n-gram rolling hashes")(
+      exprs => ShingleHashesExpr(exprs(0), litInt(exprs(1), "n"))),
+    fn("graft_deletion_hashes", "hashes of a string's deletion neighbourhood")(
+      exprs => DeletionHashesExpr(exprs(0), litInt(exprs(1), "depth"))),
+    fn("graft_minhash_sig", "minhash signature")(
+      exprs => MinHashSigExpr(exprs(0), litInt(exprs(1), "numHashes"))),
+    fn("graft_dot_long", "int64 dot product")(
+      exprs => DotLongExpr(exprs(0), exprs(1))),
+    fn("graft_sorted_intersect_count", "intersection size of two sorted bigint arrays")(
+      exprs => SortedIntersectCountExpr(exprs(0), exprs(1))),
+    fn("graft_dtw_band", "banded dynamic-time-warping distance")(
+      exprs => DtwBandExpr(exprs(0), exprs(1), litInt(exprs(2), "band"))),
+    fn("graft_quantize", "floor(x*1e6) quantisation")(
+      exprs => QuantizeExpr(exprs.head)),
+    fn("graft_simhash60", "60-bit simhash of a token array")(
+      exprs => SimHash60Expr(exprs.head)),
+    // graft_ivf_cells(qv, nrm, cids_lit, cqvs_lit, cnrms_lit, n_lit): the
+    // three centroid literals are unpacked ONCE here into a driver-side
+    // IvfIndex; the expression tree keeps only (qv, nrm) children.
+    fn("graft_ivf_cells", "top-n IVF cell ids for a quantised vector")(
+      exprs => IvfCellsExpr(
+        exprs(0), exprs(1),
+        new IvfIndex(
+          litLongArray(exprs(2), "cids"),
+          litLongMatrix(exprs(3), "cqvs"),
+          litLongArray(exprs(4), "cnrms")),
+        litInt(exprs(5), "n"))),
+    // graft_bloom_might_contain(key, bloom_bytes_lit): the serialized
+    // bloom literal is unpacked ONCE here; the expression tree keeps only
+    // the key child (plan + codegen independent of filter width).
+    fn("graft_bloom_might_contain", "bloom filter membership probe for a bigint key")(
+      exprs => BloomMightContainExpr(exprs(0), new GraftBloom(litBinary(exprs(1), "bloom")))),
+    fn("graft_cms_sketch", "Count-Min sketch of a bigint key column")(
+      exprs => CountMinAgg(exprs(0), litInt(exprs(1), "depth"), litInt(exprs(2), "width"))
+        .toAggregateExpression()),
+    // like graft_bloom_might_contain, the serialized sketch literal is
+    // unpacked once at resolution; the tree keeps only the key child
+    fn("graft_cms_lookup", "Count-Min estimate for a key")(
+      exprs => CmsLookupExpr(exprs(0), new GraftCms(litBinary(exprs(1), "cms")))),
+    fn("graft_kmv_distinct", "KMV distinct-count sketch (k minimum values)")(
+      exprs => KMVDistinctAgg(exprs(0), litInt(exprs(1), "k")).toAggregateExpression()),
+    fn("graft_kmv_values", "the k smallest distinct hashes (the KMV sketch itself)")(
+      exprs => KMVValuesAgg(exprs(0), litInt(exprs(1), "k")).toAggregateExpression()),
+    fn("graft_shingle_gen", "word n-gram hashes, one row each with its position")(
+      exprs => ShingleGen(exprs(0), litInt(exprs(1), "n"))))
+
   /** Per-session names already registered — the register-once guard.
     * Callers (Staging.tbl, harness mains) invoke register() liberally;
     * re-registering is harmless but spams every bench/verify log with one
@@ -44,56 +103,6 @@ object GraftFunctions {
   def register(spark: SparkSession): Unit = {
     if (registered.put(spark, java.lang.Boolean.TRUE) != null) return
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("graft_char_hash",
-      exprs => CharHashExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_shingle_hashes",
-      exprs => ShingleHashesExpr(exprs(0), litInt(exprs(1), "n")), "built-in")
-    reg.createOrReplaceTempFunction("graft_deletion_hashes",
-      exprs => DeletionHashesExpr(exprs(0), litInt(exprs(1), "depth")), "built-in")
-    reg.createOrReplaceTempFunction("graft_minhash_sig",
-      exprs => MinHashSigExpr(exprs(0), litInt(exprs(1), "numHashes")), "built-in")
-    reg.createOrReplaceTempFunction("graft_dot_long",
-      exprs => DotLongExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_sorted_intersect_count",
-      exprs => SortedIntersectCountExpr(exprs(0), exprs(1)), "built-in")
-    reg.createOrReplaceTempFunction("graft_dtw_band",
-      exprs => DtwBandExpr(exprs(0), exprs(1), litInt(exprs(2), "band")), "built-in")
-    reg.createOrReplaceTempFunction("graft_quantize",
-      exprs => QuantizeExpr(exprs.head), "built-in")
-    reg.createOrReplaceTempFunction("graft_simhash60",
-      exprs => SimHash60Expr(exprs.head), "built-in")
-    // graft_ivf_cells(qv, nrm, cids_lit, cqvs_lit, cnrms_lit, n_lit): the
-    // three centroid literals are unpacked ONCE here into a driver-side
-    // IvfIndex; the expression tree keeps only (qv, nrm) children.
-    reg.createOrReplaceTempFunction("graft_ivf_cells",
-      exprs => IvfCellsExpr(
-        exprs(0), exprs(1),
-        new IvfIndex(
-          litLongArray(exprs(2), "cids"),
-          litLongMatrix(exprs(3), "cqvs"),
-          litLongArray(exprs(4), "cnrms")),
-        litInt(exprs(5), "n")), "built-in")
-    // graft_bloom_might_contain(key, bloom_bytes_lit): the serialized
-    // bloom literal is unpacked ONCE here; the expression tree keeps only
-    // the key child (plan + codegen independent of filter width).
-    reg.createOrReplaceTempFunction("graft_bloom_might_contain",
-      exprs => BloomMightContainExpr(exprs(0), new GraftBloom(litBinary(exprs(1), "bloom"))),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_cms_sketch",
-      exprs => CountMinAgg(exprs(0), litInt(exprs(1), "depth"), litInt(exprs(2), "width"))
-        .toAggregateExpression(), "built-in")
-    // like graft_bloom_might_contain, the serialized sketch literal is
-    // unpacked once at resolution; the tree keeps only the key child
-    reg.createOrReplaceTempFunction("graft_cms_lookup",
-      exprs => CmsLookupExpr(exprs(0), new GraftCms(litBinary(exprs(1), "cms"))),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_kmv_distinct",
-      exprs => KMVDistinctAgg(exprs(0), litInt(exprs(1), "k")).toAggregateExpression(),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_kmv_values",
-      exprs => KMVValuesAgg(exprs(0), litInt(exprs(1), "k")).toAggregateExpression(),
-      "built-in")
-    reg.createOrReplaceTempFunction("graft_shingle_gen",
-      exprs => ShingleGen(exprs(0), litInt(exprs(1), "n")), "built-in")
+    for ((id, info, builder) <- functions) reg.registerFunction(id, info, builder)
   }
 }

@@ -2451,11 +2451,8 @@ object ExtQueries {
     * whatever happens; StatsSpec pins catalog stats reaching the
     * optimized plan. */
   def ddlAnalyzeStats(spark: SparkSession, dir: String): DataFrame = {
-    val cboWas = spark.conf.get("spark.sql.cbo.enabled", "false")
-    val reorderWas = spark.conf.get("spark.sql.cbo.joinReorder.enabled", "false")
-    try {
-      spark.conf.set("spark.sql.cbo.enabled", "true")
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
+    withConf(spark, "spark.sql.cbo.enabled" -> "true",
+        "spark.sql.cbo.joinReorder.enabled" -> "true") {
       spark.sql("DROP TABLE IF EXISTS graft_cbo_orders")
       spark.sql("DROP TABLE IF EXISTS graft_cbo_customer")
       tbl(spark, dir, "orders")
@@ -2477,9 +2474,6 @@ object ExtQueries {
       val rows = q.collect().toSeq
       spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), q.schema)
-    } finally {
-      spark.conf.set("spark.sql.cbo.enabled", cboWas)
-      spark.conf.set("spark.sql.cbo.joinReorder.enabled", reorderWas)
     }
   }
 

@@ -1,6 +1,7 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import java.nio.file.{Files, Path}
 
 /** Helpers shared by the oracle-checked queries.
@@ -40,10 +41,32 @@ object Staging {
   }
 
   /** Fresh temp dir under java.io.tmpdir; contents are small derivations of
-    * testdata, left for OS cleanup. */
+    * testdata. Spark's shutdown hook deletes it, contents and all, after
+    * the context stops. */
   def tmpDir(tag: String): String = {
     val p: Path = Files.createTempDirectory(s"graft-$tag-")
-    p.toFile.deleteOnExit()
+    org.apache.spark.sql.GraftBridge.deleteAtShutdown(p.toFile)
     p.toString
+  }
+
+  /** Start `writer`'s query, process everything its sources hold, and stop
+    * it — also when a batch fails, whose `StreamingQueryException`
+    * propagates. The one run lifecycle of the catalog's drained streams. */
+  private[graft] def drain(writer: DataStreamWriter[_]): Unit = {
+    val q = writer.start()
+    try q.processAllAvailable() finally q.stop()
+  }
+
+  /** Run `body` with the session confs in `settings` set, then restore
+    * each key's previous value, or unset a key that had none. */
+  private[graft] def withConf[A](spark: SparkSession, settings: (String, String)*)(body: => A): A = {
+    val prev = settings.map { case (k, _) => k -> spark.conf.getOption(k) }
+    try {
+      settings.foreach { case (k, v) => spark.conf.set(k, v) }
+      body
+    } finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 }

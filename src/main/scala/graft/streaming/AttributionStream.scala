@@ -63,17 +63,9 @@ object AttributionStream {
       spark, feed, chunks = 8, orderCols = Seq(col("ts_us"), col("event_id")),
       tag = "sattr")
 
-    // transformWithState needs column families -> RocksDB provider (the
-    // 100 TB configuration anyway: state off-heap per task, not in heap
-    // maps); state partitions sized to the keyspace for the run
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
     val out = tmpDir("sattrsink")
-    try {
-      val q = spark.readStream.schema(feed.schema)
+    withConf(spark, StreamQueries.RocksDbStateStore, StreamQueries.FewStatePartitions) {
+      drain(spark.readStream.schema(feed.schema)
         .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
         .parquet(glob)
         .as[Ev]
@@ -84,16 +76,7 @@ object AttributionStream {
         .option("checkpointLocation", tmpDir("sattrckpt"))
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[Attr], _: Long) =>
           batch.write.mode("append").parquet(out)
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+        })
     }
 
     spark.read.parquet(out)

@@ -79,12 +79,9 @@ object EwmaStream {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(fold _)
 
     val out = tmpDir("streamewmasink")
-    val q = snaps.toDF().writeStream
+    drain(snaps.toDF().writeStream
       .format("parquet").option("path", out).outputMode("append")
-      .option("checkpointLocation", tmpDir("streamewmackpt"))
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .option("checkpointLocation", tmpDir("streamewmackpt")))
 
     val all = spark.read.parquet(out)
     // final snapshot per user = the max-n append

@@ -86,12 +86,9 @@ object SessionizeStream {
       .flatMapGroupsWithState(OutputMode.Append, GroupStateTimeout.NoTimeout)(sessionize _)
 
     val out = tmpDir("streamsesssink")
-    val q = sessions.toDF().writeStream
+    drain(sessions.toDF().writeStream
       .format("parquet").option("path", out).outputMode("append")
-      .option("checkpointLocation", tmpDir("streamsessckpt"))
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .option("checkpointLocation", tmpDir("streamsessckpt")))
 
     spark.read.parquet(out)
       .select(

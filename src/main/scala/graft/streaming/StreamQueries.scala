@@ -57,12 +57,9 @@ object StreamQueries {
           .as("date_time"),
         col("event_type"), col("value"))
 
-    val q = stream.writeStream
+    drain(stream.writeStream
       .format("parquet").option("path", out).outputMode("append")
-      .option("checkpointLocation", tmpDir("streamckpt"))
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      .option("checkpointLocation", tmpDir("streamckpt")))
     spark.read.parquet(out).orderBy("event_id")
   }
 
@@ -90,7 +87,7 @@ object StreamQueries {
     val events = tbl(spark, dir, "events")
     events.repartition(4).write.mode("overwrite").parquet(src)
     val out = tmpDir("slmsink")
-    val q = spark.readStream.schema(events.schema)
+    drain(spark.readStream.schema(events.schema)
       .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -100,10 +97,7 @@ object StreamQueries {
           .withColumn("event_date", date_format(col("ts"), "yyyy-MM-dd"))
           .select("event_id", "event_date", "event_type", "value")
         graft.etl.LakeOps.mergeInto(spark, out, upserts, "event_id", "event_date")
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     graft.etl.LakeOps.readTable(spark, out)
       .groupBy("event_type")
       .agg(count(lit(1)).as("n"),
@@ -151,7 +145,7 @@ object StreamQueries {
             .as("embedding")))
     val src = tmpDir("sivfmsrc")
     incoming.repartition(6).write.mode("overwrite").parquet(src)
-    val q = spark.readStream.schema(incoming.schema)
+    drain(spark.readStream.schema(incoming.schema)
       .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -166,10 +160,7 @@ object StreamQueries {
         Similarity.ivfRebuildIfNeeded(spark, idx, numCentroids = 8,
           iterations = 1, sampleMod = 2L)
         ()
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     spark.read.parquet(s"${Similarity.ivfLiveRoot(spark, idx)}/vectors")
       .groupBy("vec_id").agg(count(lit(1)).as("n"))
       .orderBy("vec_id")
@@ -188,7 +179,7 @@ object StreamQueries {
     val events = tbl(spark, dir, "events")
     events.repartition(4).write.mode("overwrite").parquet(src)
     val stateRoot = tmpDir("squantstate")
-    val q = spark.readStream.schema(events.schema)
+    drain(spark.readStream.schema(events.schema)
       .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -198,10 +189,7 @@ object StreamQueries {
           .groupBy(col("event_type"), col("b")).agg(count(lit(1)).as("c"))
         KeyedStateSink.merge(stateRoot, Seq("event_type", "b"),
           minCols = Nil, sumCols = Seq("c"))(partial, batchId)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     val state = KeyedStateSink.read(spark, stateRoot).getOrElse {
       import spark.implicits._
       Seq.empty[(String, Long, Long)].toDF("event_type", "b", "c")
@@ -225,7 +213,7 @@ object StreamQueries {
     val events = tbl(spark, dir, "events")
     events.repartition(4).write.mode("overwrite").parquet(src)
     val stateRoot = tmpDir("shllstate")
-    val q = spark.readStream.schema(events.schema)
+    drain(spark.readStream.schema(events.schema)
       .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -244,10 +232,7 @@ object StreamQueries {
           .agg((-max("rho")).cast("long").as("m_neg"))
         KeyedStateSink.merge(stateRoot, Seq("event_type", "bucket"),
           minCols = Seq("m_neg"), sumCols = Nil)(partial, batchId)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     val state = KeyedStateSink.read(spark, stateRoot).getOrElse {
       import spark.implicits._
       Seq.empty[(String, Long, Long)].toDF("event_type", "bucket", "m_neg")
@@ -276,7 +261,7 @@ object StreamQueries {
     val events = tbl(spark, dir, "events")
     events.repartition(4).write.mode("overwrite").parquet(src)
     val stateRoot = tmpDir("sseastate")
-    val q = spark.readStream.schema(events.schema)
+    drain(spark.readStream.schema(events.schema)
       .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -288,10 +273,7 @@ object StreamQueries {
           .agg(count(lit(1)).as("n"), sum("cents").as("sum_cents"))
         KeyedStateSink.merge(stateRoot, Seq("event_type", "hod"),
           minCols = Nil, sumCols = Seq("n", "sum_cents"))(partial, batchId)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     val state = KeyedStateSink.read(spark, stateRoot).getOrElse {
       import spark.implicits._
       Seq.empty[(String, Long, Long, Long)].toDF("event_type", "hod", "n", "sum_cents")
@@ -329,7 +311,7 @@ object StreamQueries {
     events.filter(unix_micros(col("ts")) * 2 >= lo + hi)
       .repartition(4).write.mode("overwrite").parquet(src)
     val stateRoot = tmpDir("sdriftstate")
-    val q = spark.readStream.schema(events.schema)
+    drain(spark.readStream.schema(events.schema)
       .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -339,10 +321,7 @@ object StreamQueries {
           .groupBy("event_type", "bucket").agg(count(lit(1)).as("n_b"))
         KeyedStateSink.merge(stateRoot, Seq("event_type", "bucket"),
           minCols = Nil, sumCols = Seq("n_b"))(partial, batchId)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     val streamed = KeyedStateSink.read(spark, stateRoot).getOrElse {
       import spark.implicits._
       Seq.empty[(String, Long, Long)].toDF("event_type", "bucket", "n_b")
@@ -376,7 +355,7 @@ object StreamQueries {
     val orders = tbl(spark, dir, "orders")
     orders.repartition(4).write.mode("overwrite").parquet(src)
     val stateRoot = tmpDir("schi2state")
-    val q = spark.readStream.schema(orders.schema)
+    drain(spark.readStream.schema(orders.schema)
       .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -389,10 +368,7 @@ object StreamQueries {
           .agg(count(lit(1)).as("cnt"))
         KeyedStateSink.merge(stateRoot, Seq("c1", "c2", "c3"),
           minCols = Nil, sumCols = Seq("cnt"))(partial, batchId)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     val cube = KeyedStateSink.read(spark, stateRoot).getOrElse {
       import spark.implicits._
       Seq.empty[(String, String, String, Long)].toDF("c1", "c2", "c3", "cnt")
@@ -412,7 +388,7 @@ object StreamQueries {
     val emb = tbl(spark, dir, "embeddings")
     emb.repartition(4).write.mode("overwrite").parquet(src)
     val stateRoot = tmpDir("spcastate")
-    val q = spark.readStream.schema(emb.schema)
+    drain(spark.readStream.schema(emb.schema)
       .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -423,10 +399,7 @@ object StreamQueries {
             col("s").cast("decimal(38,0)").as("s"), col("n"))
         KeyedStateSink.merge(stateRoot, Seq("i", "j"),
           minCols = Nil, sumCols = Seq("s", "n"))(partial, batchId)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     val stats = KeyedStateSink.read(spark, stateRoot)
       .getOrElse(graft.operators.Embeddings.gramStatsOf(emb.limit(0), 64))
     graft.operators.Embeddings.pcaLoadingsFromStats(stats, iters = 8, dim = 64)
@@ -446,7 +419,7 @@ object StreamQueries {
     val events = tbl(spark, dir, "events")
     events.repartition(4).write.mode("overwrite").parquet(src)
     val stateRoot = tmpDir("stheilstate")
-    val q = spark.readStream.schema(events.schema)
+    drain(spark.readStream.schema(events.schema)
       .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -458,10 +431,7 @@ object StreamQueries {
           .agg(sum("cents").as("s_cents"), count(lit(1)).as("n"))
         KeyedStateSink.merge(stateRoot, Seq("event_type", "hr"),
           minCols = Nil, sumCols = Seq("s_cents", "n"))(partial, batchId)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     val cube = KeyedStateSink.read(spark, stateRoot).getOrElse {
       import spark.implicits._
       Seq.empty[(String, java.sql.Timestamp, Long, Long)]
@@ -488,7 +458,7 @@ object StreamQueries {
     val docs = tbl(spark, dir, "documents")
     docs.repartition(4).write.mode("overwrite").parquet(src)
     val stateRoot = tmpDir("snbstate")
-    val q = spark.readStream.schema(docs.schema)
+    drain(spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -508,10 +478,7 @@ object StreamQueries {
             sum(when(col("passes"), 0L).otherwise(1L)).as("c_neg"))
         KeyedStateSink.merge(stateRoot, Seq("bucket"),
           minCols = Nil, sumCols = Seq("c_pos", "c_neg"))(partial, batchId)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     val counts = KeyedStateSink.read(spark, stateRoot).getOrElse {
       import spark.implicits._
       Seq.empty[(Long, Long, Long)].toDF("bucket", "c_pos", "c_neg")
@@ -544,7 +511,7 @@ object StreamQueries {
     val evalGrams = gramsOf(docs.filter(col("doc_id") % 10 === 7))
       .select("sh").distinct().graftCheckpoint()
     val stateRoot = tmpDir("sconstate")
-    val q = spark.readStream.schema(docs.schema)
+    drain(spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -560,10 +527,7 @@ object StreamQueries {
             sum(coalesce(col("h"), lit(0L))).as("n_contaminated"))
         KeyedStateSink.merge(stateRoot, Seq("source"),
           minCols = Nil, sumCols = Seq("n_train", "n_contaminated"))(partial, batchId)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     val census = KeyedStateSink.read(spark, stateRoot).getOrElse {
       import spark.implicits._
       Seq.empty[(String, Long, Long)].toDF("source", "n_train", "n_contaminated")
@@ -585,7 +549,7 @@ object StreamQueries {
     val events = tbl(spark, dir, "events")
     events.repartition(4).write.mode("overwrite").parquet(src)
     val stateRoot = tmpDir("sdtwstate")
-    val q = spark.readStream.schema(events.schema)
+    drain(spark.readStream.schema(events.schema)
       .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -597,10 +561,7 @@ object StreamQueries {
           .agg(sum("cents").as("s_cents"), count(lit(1)).as("n"))
         KeyedStateSink.merge(stateRoot, Seq("event_type", "hod"),
           minCols = Nil, sumCols = Seq("s_cents", "n"))(partial, batchId)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     val cube = KeyedStateSink.read(spark, stateRoot).getOrElse {
       import spark.implicits._
       Seq.empty[(String, Long, Long, Long)]
@@ -618,7 +579,7 @@ object StreamQueries {
     events.repartition(4).write.mode("overwrite").parquet(src)
     val stateRoot = tmpDir("streamwinstate")
 
-    val q = spark.readStream.schema(events.schema)
+    drain(spark.readStream.schema(events.schema)
       .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -633,10 +594,7 @@ object StreamQueries {
             sum(col("value").cast("decimal(18,2)")).cast("decimal(38,2)").as("sum_dec"))
         KeyedStateSink.merge(stateRoot, Seq("win_start", "event_type"),
           minCols = Nil, sumCols = Seq("n", "sum_dec"))(partial, batchId)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
 
     KeyedStateSink.read(spark, stateRoot)
       .getOrElse { import spark.implicits._
@@ -660,7 +618,7 @@ object StreamQueries {
       .agg(count(lit(1)).as("n_user_events"))
     val stateRoot = tmpDir("streamjoinstate")
 
-    val q = spark.readStream.schema(events.schema)
+    drain(spark.readStream.schema(events.schema)
       .option("maxFilesPerTrigger", 2).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -675,10 +633,7 @@ object StreamQueries {
             sum(col("n_user_events")).as("sum_dim"))
         KeyedStateSink.merge(stateRoot, Seq("event_type"),
           minCols = Nil, sumCols = Seq("n", "sum_dec", "sum_dim"))(partial, batchId)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
 
     KeyedStateSink.read(spark, stateRoot)
       .getOrElse { import spark.implicits._
@@ -689,8 +644,8 @@ object StreamQueries {
       .orderBy("event_type")
   }
 
-  /** Start the scale-safe streaming dedup query over a parquet document
-    * directory: minhash signature computed map-side per micro-batch
+  /** The writer of the scale-safe streaming dedup query over a parquet
+    * document directory: minhash signature computed map-side per micro-batch
     * (native expression, no shuffle before the merge), per-batch clusters
     * merged into [[ClusterStateSink]] via foreachBatch. NO complete output
     * mode, NO memory sink: state lives in the keyed store, each trigger
@@ -698,13 +653,13 @@ object StreamQueries {
     * the formulation that survives an unbounded firehose. min(rep)/
     * sum(n_docs) merging keeps the representative deterministic regardless
     * of micro-batch boundaries. */
-  private[graft] def startDedupClusterQuery(
+  private[graft] def dedupClusterWriter(
       spark: SparkSession,
       src: String,
       schema: StructType,
       checkpoint: String,
       stateRoot: String,
-      maxFilesPerTrigger: Int = 2): org.apache.spark.sql.streaming.StreamingQuery = {
+      maxFilesPerTrigger: Int = 2): org.apache.spark.sql.streaming.DataStreamWriter[_] = {
     import graft.functions.CrossFns._
     val sigs = spark.readStream.schema(schema)
       .option("maxFilesPerTrigger", maxFilesPerTrigger)
@@ -719,12 +674,11 @@ object StreamQueries {
     sigs.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch(ClusterStateSink.merge(stateRoot) _)
-      .start()
   }
 
   /** Streaming dedup for a document firehose — the streaming form of
     * dedup_minhash_clusters, through the foreachBatch keyed-state merge
-    * ([[startDedupClusterQuery]]/[[ClusterStateSink]]). The staged corpus
+    * ([[dedupClusterWriter]]/[[ClusterStateSink]]). The staged corpus
     * is split across several real micro-batches; the drained state must
     * (and does — same oracle) equal the batch groupBy. */
   def streamDedupClusters(spark: SparkSession, dir: String): DataFrame = {
@@ -733,10 +687,8 @@ object StreamQueries {
     docs.repartition(4).write.mode("overwrite").parquet(src)
     val stateRoot = tmpDir("streamdedupstate")
 
-    val q = startDedupClusterQuery(
-      spark, src, docs.schema, tmpDir("streamdedupckpt"), stateRoot)
-    q.processAllAvailable()
-    q.stop()
+    drain(dedupClusterWriter(
+      spark, src, docs.schema, tmpDir("streamdedupckpt"), stateRoot))
     ClusterStateSink.read(spark, stateRoot).select("rep", "n_docs").orderBy("rep")
   }
 
@@ -775,18 +727,20 @@ object StreamQueries {
     s"$src/*"
   }
 
-  /** Run `body` with a reduced shuffle-partition count, restoring the old
-    * value after. Stateful streaming cost is dominated by per-partition
-    * state-store checkpoint files (partitions × state stores × batches), so
-    * a small staged stream wants few, fat state partitions; on a real
-    * cluster this is the `spark.sql.shuffle.partitions` the job submits
-    * with. Result values are partitioning-independent. */
-  private def withShufflePartitions[A](spark: SparkSession, n: Int)(body: => A): A = {
-    val key = "spark.sql.shuffle.partitions"
-    val old = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, old)
-  }
+  /** The shuffle-partition count a stateful staged stream runs with (in
+    * a `withConf` window). Stateful streaming cost is dominated by
+    * per-partition state-store checkpoint files (partitions × state
+    * stores × batches), so a small staged stream wants few, fat state
+    * partitions; on a real cluster this is the
+    * `spark.sql.shuffle.partitions` the job submits with. Result values
+    * are partitioning-independent. */
+  private[streaming] val FewStatePartitions = "spark.sql.shuffle.partitions" -> "8"
+
+  /** The state store `transformWithState` needs: its column families
+    * exist only in the RocksDB provider, which also keeps state off-heap
+    * per task instead of in executor heap maps. */
+  private[streaming] val RocksDbStateStore = "spark.sql.streaming.stateStore.providerClass" ->
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
   /** Watermarked APPEND-mode windowed aggregation — Spark's own stateful
     * streaming aggregation (vs the foreachBatch keyed-merge form of
@@ -809,8 +763,8 @@ object StreamQueries {
       Seq(col("ts")), "streamwinapp")
 
     val out = tmpDir("streamwinappsink")
-    withShufflePartitions(spark, 8) {
-      val q = spark.readStream.schema(events.schema)
+    withConf(spark, FewStatePartitions) {
+      drain(spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
         .parquet(glob)
         .withWatermark("ts", "0 seconds")
@@ -820,10 +774,7 @@ object StreamQueries {
           sum(col("value").cast("decimal(18,2)")).cast("decimal(38,2)").as("sum_dec"))
         .writeStream
         .format("parquet").option("path", out).outputMode("append")
-        .option("checkpointLocation", tmpDir("streamwinappckpt"))
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        .option("checkpointLocation", tmpDir("streamwinappckpt")))
     }
 
     spark.read.parquet(out)
@@ -852,8 +803,8 @@ object StreamQueries {
     val glob = stageChronological(spark, purchases, 3, Seq(col("ts"), col("event_id")), "strasof")
 
     val out = tmpDir("strasofsink")
-    withShufflePartitions(spark, 8) {
-      val q = spark.readStream.schema(purchases.schema)
+    withConf(spark, FewStatePartitions) {
+      drain(spark.readStream.schema(purchases.schema)
         .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
         .parquet(glob)
         .writeStream
@@ -862,10 +813,7 @@ object StreamQueries {
           graft.operators.AsOfJoin
             .asOfNative(batch, clicks, "user_id", "ts", "event_id", Seq("value"))
             .write.mode("append").parquet(out)
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        })
     }
 
     spark.read.parquet(out)
@@ -895,8 +843,8 @@ object StreamQueries {
     val glob = stageChronological(spark, events, 4, Seq(col("event_id")), "strhh")
     val sketchDir = java.nio.file.Paths.get(tmpDir("strhhsketches"))
 
-    withShufflePartitions(spark, 8) {
-      val q = spark.readStream.schema(events.schema)
+    withConf(spark, FewStatePartitions) {
+      drain(spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
         .parquet(glob)
         .writeStream
@@ -908,10 +856,7 @@ object StreamQueries {
             .head().getAs[Array[Byte]](0)
           java.nio.file.Files.write(sketchDir.resolve(f"batch-$id%05d.cms"), sketch)
           ()
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        })
     }
 
     import scala.jdk.CollectionConverters._
@@ -953,8 +898,8 @@ object StreamQueries {
     // no seed needed: mergeInto bootstraps a missing table on first merge
     val sink = tmpDir("strupsertsink") + "/table"
 
-    withShufflePartitions(spark, 8) {
-      val q = spark.readStream.schema(events.schema)
+    withConf(spark, FewStatePartitions) {
+      drain(spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
         .parquet(glob)
         .writeStream
@@ -968,10 +913,7 @@ object StreamQueries {
             .filter(col("rk") === 1).drop("rk")
             .withColumn("part", col("user_id") % 8)
           graft.etl.LakeOps.mergeInto(batch.sparkSession, sink, latest, "user_id", "part")
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        })
     }
 
     spark.read.parquet(sink)
@@ -1004,8 +946,8 @@ object StreamQueries {
       Seq(col("ts"), col("user_id")), "sesswin")
 
     val out = tmpDir("sesswinsink")
-    withShufflePartitions(spark, 8) {
-      val q = spark.readStream.schema(events.schema)
+    withConf(spark, FewStatePartitions) {
+      drain(spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
         .parquet(glob)
         .withWatermark("ts", "0 seconds")
@@ -1013,10 +955,7 @@ object StreamQueries {
         .agg(count(lit(1)).as("n_events"))
         .writeStream
         .format("parquet").option("path", out).outputMode("append")
-        .option("checkpointLocation", tmpDir("sesswinckpt"))
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        .option("checkpointLocation", tmpDir("sesswinckpt")))
     }
 
     spark.read.parquet(out)
@@ -1059,13 +998,10 @@ object StreamQueries {
         col("purchase_ts") <= col("click_ts") + expr("INTERVAL 30 MINUTES"))
 
     val out = tmpDir("ssjsink")
-    withShufflePartitions(spark, 8) {
-      val q = joined.writeStream
+    withConf(spark, FewStatePartitions) {
+      drain(joined.writeStream
         .format("parquet").option("path", out).outputMode("append")
-        .option("checkpointLocation", tmpDir("ssjckpt"))
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        .option("checkpointLocation", tmpDir("ssjckpt")))
     }
 
     spark.read.parquet(out)
@@ -1093,18 +1029,15 @@ object StreamQueries {
       Seq(col("ts"), col("event_id")), "dropdup")
 
     val out = tmpDir("dropdupsink")
-    withShufflePartitions(spark, 8) {
-      val q = spark.readStream.schema(events.schema)
+    withConf(spark, FewStatePartitions) {
+      drain(spark.readStream.schema(events.schema)
         .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
         .parquet(glob)
         .withWatermark("ts", "30 minutes")
         .dropDuplicatesWithinWatermark("event_id")
         .writeStream
         .format("parquet").option("path", out).outputMode("append")
-        .option("checkpointLocation", tmpDir("dropdupckpt"))
-        .start()
-      q.processAllAvailable()
-      q.stop()
+        .option("checkpointLocation", tmpDir("dropdupckpt")))
     }
 
     spark.read.parquet(out)
@@ -1130,7 +1063,7 @@ object StreamQueries {
     val docs = tbl(spark, dir, "documents")
     docs.repartition(4).write.mode("overwrite").parquet(src)
     val out = tmpDir("sqgout")
-    val q = spark.readStream.schema(docs.schema)
+    drain(spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -1141,10 +1074,7 @@ object StreamQueries {
         batch.join(passed, Seq("doc_id"), "left_semi")
           .select("doc_id", "source", "lang", "n_chars")
           .write.mode("append").parquet(out)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     spark.read.parquet(out)
       .groupBy("source", "lang")
       .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("sum_chars"))
@@ -1164,7 +1094,7 @@ object StreamQueries {
     val docs = tbl(spark, dir, "documents")
     docs.repartition(4).write.mode("overwrite").parquet(src)
     val out = tmpDir("scdcout")
-    val q = spark.readStream.schema(docs.schema)
+    drain(spark.readStream.schema(docs.schema)
       .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -1172,10 +1102,7 @@ object StreamQueries {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         graft.operators.Dedup.cdcChunkHashes(batch)
           .write.mode("append").parquet(out)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     graft.operators.Dedup.cdcCensus(spark.read.parquet(out)).orderBy("source")
   }
 
@@ -1194,7 +1121,7 @@ object StreamQueries {
     cust.repartition(4).write.mode("overwrite").parquet(src)
     val out = tmpDir("slpout")
     val hist = tmpDir("slphist")
-    val q = spark.readStream.schema(cust.schema)
+    drain(spark.readStream.schema(cust.schema)
       .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -1222,10 +1149,7 @@ object StreamQueries {
           .pairsIncrementalAdaptive(b, histDf, histDf.count(), maxDist = 2)
           .write.mode("append").parquet(out)
         b.write.mode("append").parquet(hist)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     spark.read.parquet(out).orderBy("cust_a", "cust_b")
   }
 
@@ -1259,17 +1183,14 @@ object StreamQueries {
     val hist = tmpDir("slghist")
     val fwd = tmpDir("slgfwd")
     val golden = tmpDir("slggold")
-    val q = spark.readStream.schema(cust.schema)
+    drain(spark.readStream.schema(cust.schema)
       .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
       .option("checkpointLocation", tmpDir("slgckpt"))
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         graft.etl.ErLedger.foldBatch(batch, batchId, hist, fwd, golden)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     graft.etl.ErLedger.readGolden(spark, golden)
       .select(col("cluster_id"), col("golden_name"),
         col("n_members").cast("long").as("n_members"), col("max_bal"))
@@ -1293,7 +1214,7 @@ object StreamQueries {
         expr("CAST(round(o_totalprice * 100, 0) AS BIGINT)").as("cents"))
       .groupBy("month", "priority")
       .agg(count(lit(1)).as("n_orders"), sum("cents").as("rev_cents"))
-    val q = spark.readStream.schema(orders.schema)
+    drain(spark.readStream.schema(orders.schema)
       .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -1310,10 +1231,7 @@ object StreamQueries {
         // write-then-swap: materialise the merge before overwriting the MV
         val out = merged.graftCheckpoint()
         out.write.mode("overwrite").parquet(mvPath)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     spark.read.parquet(mvPath)
       .select(col("month"), col("priority"),
         col("n_orders").cast("long").as("n_orders"), col("rev_cents"))
@@ -1336,7 +1254,7 @@ object StreamQueries {
     // window) — same operator as the batch face, run on frontier ∪ batch
     def skyline(df: DataFrame): DataFrame =
       graft.operators.Skyline.paretoMin(df).select("okey", "cents", "days")
-    val q = spark.readStream.schema(orders.schema)
+    drain(spark.readStream.schema(orders.schema)
       .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -1349,10 +1267,7 @@ object StreamQueries {
         val prev = priorState(pts.sparkSession, front, pts.schema).getOrElse(pts.limit(0))
         val merged = skyline(prev.unionByName(pts)).graftCheckpoint()
         merged.write.mode("overwrite").parquet(front)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     spark.read.parquet(front).orderBy("cents", "days", "okey")
   }
 
@@ -1370,7 +1285,7 @@ object StreamQueries {
       .select(col("user_id").as("d_user"), col("version"), col("state"),
         col("valid_from"), col("valid_to"))
     val out = tmpDir("stjout")
-    val q = spark.readStream.schema(events.schema)
+    drain(spark.readStream.schema(events.schema)
       .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -1386,10 +1301,7 @@ object StreamQueries {
           .select(col("event_id"), col("user_id"), col("version"), col("state"),
             date_format(col("pts"), "yyyy-MM-dd HH:mm:ss").as("pts_s"))
           .write.mode("append").parquet(out)
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     spark.read.parquet(out).orderBy("event_id")
   }
 
@@ -1434,7 +1346,7 @@ object StreamQueries {
     val url = s"jdbc:derby:${tmpDir("sjdbcdb")}/streamdb;create=true"
     val opts = graft.sources.JdbcSink.writerOptions(
       graft.sources.JdbcSink.JdbcOptions(url, "GRAFT_STREAM_SINK", numPartitions = 2))
-    val q = spark.readStream.schema(shaped.schema)
+    drain(spark.readStream.schema(shaped.schema)
       .option("maxFilesPerTrigger", 1).option("pathGlobFilter", "*.parquet")
       .parquet(src)
       .writeStream
@@ -1462,10 +1374,7 @@ object StreamQueries {
         batch.join(existing, Seq("event_id"), "left_anti")
           .write.format("jdbc").options(opts).mode("append").save()
         }
-      }
-      .start()
-    q.processAllAvailable()
-    q.stop()
+      })
     spark.read.format("jdbc")
       .option("url", url).option("dbtable", "GRAFT_STREAM_SINK")
       .load().orderBy("event_id")

@@ -62,17 +62,11 @@ object TransformStateStream {
       StructField("event_id", LongType), StructField("user_id", LongType),
       StructField("cents", LongType)))
 
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // State-store parallelism follows shuffle partitions: at 32 partitions a
-    // 4-batch drain opens 128 RocksDB instances for ~1k keys. Size the state
-    // partitioning to the keyspace for the stream's lifetime (the standard
-    // stateful-streaming tuning lever), restore after.
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
+    // 4-batch drain opens 128 RocksDB instances for ~1k keys, so the state
+    // partitioning is sized to the keyspace for the stream's lifetime.
     val out = tmpDir("twssink")
-    try {
+    withConf(spark, StreamQueries.RocksDbStateStore, StreamQueries.FewStatePartitions) {
       val updates = spark.readStream
         .option("header", "true").option("maxFilesPerTrigger", 2)
         .schema(schema).option("pathGlobFilter", "*.csv").csv(src)
@@ -80,21 +74,12 @@ object TransformStateStream {
         .groupByKey(_.user_id)
         .transformWithState(new RunningTotals, TimeMode.None(), OutputMode.Update())
 
-      val q = updates.writeStream
+      drain(updates.writeStream
         .outputMode("update")
         .option("checkpointLocation", tmpDir("twsckpt"))
         .foreachBatch { (batch: org.apache.spark.sql.Dataset[Out], _: Long) =>
           batch.write.mode("append").parquet(out)
-        }
-        .start()
-      q.processAllAvailable()
-      q.stop()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+        })
     }
     spark.read.parquet(out)
       .groupBy("user_id")

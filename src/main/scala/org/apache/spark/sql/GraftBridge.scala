@@ -2,11 +2,13 @@ package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** The one `private[sql]` doorway the library needs: turning a custom
-  * [[LogicalPlan]] node (graft.plans.AsOfJoinPlan) into a DataFrame and
-  * reading a DataFrame's analyzed plan back out. Everything else in the
-  * repo sticks to the public DataFrame/Catalyst extension APIs; this file
-  * lives in the Spark package purely for access, it contains no logic. */
+/** The one doorway to Spark's `private[sql]` and `private[spark]` members
+  * the library needs: turning a custom [[LogicalPlan]] node
+  * (graft.plans.AsOfJoinPlan) into a DataFrame, reading a DataFrame's
+  * analyzed plan back out, and registering a scratch directory with
+  * Spark's shutdown-time delete. Everything else in the repo sticks to the
+  * public DataFrame/Catalyst extension APIs; this file lives in the Spark
+  * package purely for access, it contains no logic. */
 object GraftBridge {
 
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
@@ -35,4 +37,9 @@ object GraftBridge {
     * pass. */
   def column(e: org.apache.spark.sql.catalyst.expressions.Expression): Column =
     classic.ExpressionUtils.column(e)
+
+  /** Delete `dir` recursively when the JVM exits, after the SparkContext
+    * has stopped (Spark's own temp-dir shutdown hook). */
+  def deleteAtShutdown(dir: java.io.File): Unit =
+    org.apache.spark.util.ShutdownHookManager.registerShutdownDeleteDir(dir)
 }

@@ -168,16 +168,16 @@ class StreamingSpec extends SparkSpec {
     // phase 1: half the corpus arrives, query drains and is STOPPED
     docs.filter(col("doc_id") < 250).repartition(2)
       .write.mode("overwrite").parquet(s"$src/drop1")
-    val q1 = graft.streaming.StreamQueries.startDedupClusterQuery(
-      spark, s"$src/*", docs.schema, ckpt, state)
+    val q1 = graft.streaming.StreamQueries.dedupClusterWriter(
+      spark, s"$src/*", docs.schema, ckpt, state).start()
     q1.processAllAvailable(); q1.stop()
 
     // phase 2: the rest lands while the query is down; restart from the
     // same checkpoint + state root
     docs.filter(col("doc_id") >= 250).repartition(2)
       .write.mode("overwrite").parquet(s"$src/drop2")
-    val q2 = graft.streaming.StreamQueries.startDedupClusterQuery(
-      spark, s"$src/*", docs.schema, ckpt, state)
+    val q2 = graft.streaming.StreamQueries.dedupClusterWriter(
+      spark, s"$src/*", docs.schema, ckpt, state).start()
     q2.processAllAvailable(); q2.stop()
 
     val streamed = graft.streaming.ClusterStateSink.read(spark, state)
@@ -267,6 +267,39 @@ class StreamingSpec extends SparkSpec {
       causes.map(_.toString).mkString("\n"))
     assert(new java.io.File(state).list().toSeq === Seq("part-0.parquet"), "the state is kept")
     assert(Files.readString(corrupt) === "not a parquet file")
+  }
+
+  test("drain rethrows a failed batch's cause and leaves no query running") {
+    val src = graft.queries.Staging.tmpDir("drain-src")
+    val ckpt = graft.queries.Staging.tmpDir("drain-ckpt")
+    writeFile(src, "a.csv", Seq((1L, 1.0)))
+
+    val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException](
+      graft.queries.Staging.drain(
+        spark.readStream.schema(schema).option("header", "true").csv(src)
+          .writeStream.option("checkpointLocation", ckpt)
+          .foreachBatch { (_: org.apache.spark.sql.DataFrame, _: Long) =>
+            throw new IllegalStateException("batch failed on purpose")
+          }))
+    val causes = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).toSeq
+    assert(causes.exists(c => c.isInstanceOf[IllegalStateException] &&
+      c.getMessage == "batch failed on purpose"), causes.map(_.toString).mkString("\n"))
+    assert(spark.streams.active.isEmpty)
+  }
+
+  test("withConf restores a set key and unsets an absent one when its body throws") {
+    val present = "spark.sql.shuffle.partitions"
+    val absent = "spark.graft.test.absent"
+    val before = spark.conf.get(present)
+    assert(spark.conf.getOption(absent).isEmpty)
+    intercept[IllegalStateException](
+      graft.queries.Staging.withConf(spark, present -> "3", absent -> "x") {
+        assert(spark.conf.get(present) === "3")
+        assert(spark.conf.get(absent) === "x")
+        throw new IllegalStateException("body failed on purpose")
+      })
+    assert(spark.conf.get(present) === before)
+    assert(spark.conf.getOption(absent).isEmpty)
   }
 
   test("stream_attribution equals the batch running-window attribution exactly") {
